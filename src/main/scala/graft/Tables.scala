@@ -15,25 +15,29 @@ object Tables {
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      // The driver's events.parquet has shipped ts three ways across
-      // testdata generations: TIMESTAMP(NANOS) (refused by Spark's
-      // µs TimestampType — read as raw int64 nanos and divide; the
-      // data is µs-aligned so this is lossless), TIMESTAMP_NTZ(µs)
-      // (naive µs — cast through the UTC session zone, which every
-      // entry point pins, reproducing the same instants), and plain
-      // TIMESTAMP(µs) in tools.Scale rewrites (passthrough). All
-      // downstream code sees one type: TimestampType, µs, UTC.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
-      raw.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.withColumn("ts",
-            org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          raw.withColumn("ts", raw("ts").cast(org.apache.spark.sql.types.TimestampType))
-        case _ => raw
-      }
+      eventTime(spark.read.parquet(s"$dir/events.parquet"))
     } else spark.read.parquet(s"$dir/$name.parquet")
+
+  /** events' `ts` as TimestampType, for a batch or a streaming read
+    * made with `spark.sql.legacy.parquet.nanosAsLong` set. The test
+    * data's events.parquet has shipped ts three ways across its
+    * generations: TIMESTAMP(NANOS) (refused by Spark's µs
+    * TimestampType — read as raw int64 nanos and divide; the data is
+    * µs-aligned so this is lossless), TIMESTAMP_NTZ(µs) (naive µs —
+    * cast through the UTC session zone, which every entry point pins,
+    * reproducing the same instants), and plain TIMESTAMP(µs) in
+    * tools.Scale rewrites (passthrough). All downstream code sees one
+    * type: TimestampType, µs, UTC. */
+  private[graft] def eventTime(raw: DataFrame): DataFrame =
+    raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.withColumn("ts",
+          org.apache.spark.sql.functions.expr("timestamp_micros(ts div 1000)"))
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        raw.withColumn("ts", raw("ts").cast(org.apache.spark.sql.types.TimestampType))
+      case _ => raw
+    }
 
   /** Register every table as a temp view so queries can exercise the
     * SQL surface (the reference's Table/SQL API — SURVEY.md §3.3). */

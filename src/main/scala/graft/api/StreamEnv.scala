@@ -25,6 +25,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   * with a per-KEY punctuation clock (+ optional engine fallback),
   * and a job-wide marker is expressed by fanning the marker out to
   * every key upstream (StreamEnvSpec "cross-key markers").
+  *
+  * Bounded file sources, end of input and run-to-completion sinks
+  * live in [[StreamRun]].
   */
 final class StreamEnv(val spark: SparkSession) {
 
@@ -52,15 +55,6 @@ final class StreamEnv(val spark: SparkSession) {
       .option("subscribe", topics)
       .option("startingOffsets", startingOffsets)
       .load()
-
-  /** Monitored-directory file source (StreamExecutionEnvironment
-    * .java:940 readFile + PROCESS_CONTINUOUSLY). */
-  def readFileStream(format: String, dir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      globFilter: Option[String] = None): DataFrame = {
-    val r = spark.readStream.schema(schema)
-    globFilter.fold(r)(g => r.option("pathGlobFilter", g)).format(format).load(dir)
-  }
 
   def fromDataFrame(df: DataFrame): StreamOpsRow = new StreamOpsRow(df)
 }
@@ -136,15 +130,6 @@ final class StreamOpsRow(val df: DataFrame) {
 
   def printSink(): StreamingQuery =
     df.writeStream.format("console").outputMode("append").start()
-
-  def memorySink(name: String, mode: String = "append"): DataFrame = {
-    df.sparkSession.catalog.dropTempView(name)
-    val query = df.writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    query.processAllAvailable()
-    query.stop()
-    df.sparkSession.table(name)
-  }
 
   def foreachBatchSink(f: (DataFrame, Long) => Unit): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream.foreachBatch(f)

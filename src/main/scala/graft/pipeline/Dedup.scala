@@ -187,14 +187,9 @@ object Dedup extends QueryModule {
       def tmp(p: String) = scratchDir(p)
       val idxPath = tmp("graft-ingest-idx")
       DedupIndex.save(corpus, idxPath)
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream =
-        (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-          s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-        else s.readStream.schema(raw)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
-          .filter(col("doc_id") % 10 === 9)
-          .select(col("doc_id"), col("text"))
+      val stream = graft.api.StreamRun.fileSource(s, dir, "documents")
+        .filter(col("doc_id") % 10 === 9)
+        .select(col("doc_id"), col("text"))
       val outPath = tmp("graft-ingest-out")
       val admittedPath = tmp("graft-ingest-admitted")
       // schema seeds: an EMPTY delta slice produces zero micro-batches,
@@ -212,20 +207,16 @@ object Dedup extends QueryModule {
       DedupIndex.dedupDelta(idx, emptyDelta, Int.MaxValue)
         .write.mode("overwrite").parquet(outPath)
       emptyDelta.write.mode("overwrite").parquet(admittedPath)
-      val q = stream.writeStream
-        .option("checkpointLocation", tmp("graft-ingest-ckpt"))
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val verdict = DedupIndex.dedupDelta(idx, batch, Int.MaxValue)
-            .localCheckpoint()
-          verdict.write.mode("append").parquet(outPath)
-          // day-close commit source: only docs the verdict admitted
-          batch.join(verdict.filter(col("is_new"))
-            .select(col("doc_id")), "doc_id")
-            .write.mode("append").parquet(admittedPath)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+      graft.api.StreamRun(s, "graft_stream_index_ingest").foreachBatch(stream,
+          tmp("graft-ingest-ckpt")) { batch =>
+        val verdict = DedupIndex.dedupDelta(idx, batch, Int.MaxValue)
+          .localCheckpoint()
+        verdict.write.mode("append").parquet(outPath)
+        // day-close commit source: only docs the verdict admitted
+        batch.join(verdict.filter(col("is_new"))
+          .select(col("doc_id")), "doc_id")
+          .write.mode("append").parquet(admittedPath)
+      }
       DedupIndex.update(s.read.parquet(admittedPath), idxPath)
       s.read.parquet(outPath).orderBy(col("doc_id"))
     },
@@ -362,7 +353,7 @@ object Dedup extends QueryModule {
     q("q136_stream_dedup_minhash",
       duckPairsCtes(recursive = false) +
         "\nSELECT doc_b AS doc_id, min(doc_a) AS dup_of FROM good GROUP BY doc_b ORDER BY doc_id") {
-      (s, dir) => StreamingDedup.minhashDedup(s, dir)
+      (s, dir) => StreamingDedup.minhashDedup(s, dir).df
     },
 
     // ----- SimHash: 32-bit signature from frequency-weighted word

@@ -747,12 +747,7 @@ object Quality extends QueryModule {
     * into an append-mode memory sink. */
   private def streamGate(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val (b, w, m, sd) = gateModel(s, dir)
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
+    val stream = graft.api.StreamRun.fileSource(s, dir, "documents")
     // r18 OPT (guide §2.5, the q243 stream device): the single-file
     // source gives each micro-batch a 1-2-split map side, serializing
     // the per-word-md5 featurization; one doc-sized exchange fans the
@@ -763,12 +758,8 @@ object Quality extends QueryModule {
       .withColumn("p", lit(1.0) / (lit(1.0) + exp(-zCol(b, w, m, sd))))
       .select(col("doc_id"), round(col("p"), 6).as("score"),
         (col("p") >= 0.5).cast("int").as("admitted"))
-    s.catalog.dropTempView("graft_stream_gate")
-    val query = scored.writeStream.format("memory")
-      .queryName("graft_stream_gate").outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table("graft_stream_gate").orderBy(col("doc_id"))
+    graft.api.StreamRun(s, "graft_stream_classifier_gate").toMemory(scored).df
+      .orderBy(col("doc_id"))
   }
 
   // ---- q212/q213 machinery ----------------------------------------

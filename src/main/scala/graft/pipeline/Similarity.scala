@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.api.StreamRun
 import graft.functions.TopK
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1373,7 +1374,7 @@ object Similarity extends QueryModule {
         |             JOIN norms nb ON nb.vec_id = b_id)
         |SELECT b_id AS vec_id, min(a_id) AS dup_of
         |FROM scored WHERE score >= 0.25 GROUP BY b_id ORDER BY vec_id""") { (s, dir) =>
-      StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(100L))
+      StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(100L)).df
     },
 
     // ----- the same ingest dedup blocked by random-hyperplane LSH
@@ -1417,7 +1418,7 @@ object Similarity extends QueryModule {
       // env, which the driver never sets.
       StreamingDedup.embeddingNearDup(s, dir, horizonSeconds = Some(200L),
         signTables = sys.env.get("GRAFT_SIGN_TABLES").map(_.toInt).getOrElse(4),
-        signBits = sys.env.get("GRAFT_SIGN_BITS").map(_.toInt).getOrElse(2))
+        signBits = sys.env.get("GRAFT_SIGN_BITS").map(_.toInt).getOrElse(2)).df
     },
 
     // ----- IVF-shaped two-stage search: stage 1 routes each probe to
@@ -1891,9 +1892,9 @@ object Similarity extends QueryModule {
     // (bounded state: windows × k cells), deterministic under any
     // micro-batch schedule, so the batch oracle (delta assignment +
     // epoch bucketing) replays it exactly. Arrival clock ts =
-    // vec_id + 1 s (the q136 convention); the far-future sentinel
-    // carries vec_id ≡ 9 (mod 10) so the pushed-down delta filter
-    // cannot drop it below the watermark node (the q158 lesson). -----
+    // vec_id + 1 s (StreamRun.idClock); the end-of-input row carries
+    // vec_id ≡ 9 (mod 10) so the pushed-down delta filter cannot drop
+    // it below the watermark node (StreamRun's guard). -----
     q("q246_stream_cell_drift",
       s"""WITH ${duckLloydCtes(8, 2, "WHERE vec_id % 10 <> 9")},
         |de AS (SELECT vec_id, embedding FROM embeddings
@@ -2477,13 +2478,8 @@ object Similarity extends QueryModule {
     val fn = AnnIndex.assigner(s, idxPath)
     AnnIndex.append(fn(e.filter(col("vec_id") % 10 === 9)), idxPath,
       epoch = 0L)
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .filter(col("doc_id") < 10)
+    val stream = StreamRun.fileSource(s, dir, "documents")
+      .filter(col("doc_id") < 10)
     val outPath = Dedup.scratchDir("graft-xmstream-out")
     // schema seed (the q185 device): an empty caption stream must
     // leave outPath readable with the probe's output schema
@@ -2492,60 +2488,35 @@ object Similarity extends QueryModule {
         .localCheckpoint(),
       excludeSelf = false)
       .write.mode("overwrite").parquet(outPath)
-    val q = stream.writeStream
-      .option("checkpointLocation", Dedup.scratchDir("graft-xmstream-ckpt"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val caps = captionFeatures(batch).localCheckpoint()
-        if (!caps.isEmpty)
-          annProbe(s, idxPath, caps, excludeSelf = false)
-            .write.mode("append").parquet(outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamRun(s, "graft_stream_xmodal_retrieval").foreachBatch(stream,
+        Dedup.scratchDir("graft-xmstream-ckpt")) { batch =>
+      val caps = captionFeatures(batch).localCheckpoint()
+      if (!caps.isEmpty)
+        annProbe(s, idxPath, caps, excludeSelf = false)
+          .write.mode("append").parquet(outPath)
+    }
     s.read.parquet(outPath).orderBy(col("query_id"), col("rn"))
   }
 
   /** q246's engine: frozen-index per-row assignment inside a
     * watermark-sealed windowed count. */
   private[pipeline] def streamCellDrift(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sq = s.sqlContext
     val e = Tables.t(s, dir, "embeddings")
     val corpus = e.filter(col("vec_id") % 10 =!= 9)
     val idxPath = Dedup.scratchDir("graft-anndrift-idx")
     AnnIndex.save(s, corpus, idxPath)
     val fn = AnnIndex.assigner(s, idxPath)
-    // ≡ 9 (mod 10): the sentinel must PASS the delta filter (Catalyst
-    // pushes it through the union below the watermark node)
-    val sentinelSec = 4102444809L
-    val maxId = e.agg(max(col("vec_id").cast("long"))).head.getLong(0)
-    require(maxId + 1 < sentinelSec,
-      s"vec_id $maxId reaches the watermark sentinel epoch $sentinelSec")
-    val raw = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Array[Float])]
-    sentinel.addData((sentinelSec, Array.fill(64)(0f)))
-    val stream =
-      (if (new java.io.File(s"$dir/embeddings.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/embeddings.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-        .unionByName(sentinel.toDF().toDF("vec_id", "embedding"))
-        .filter(col("vec_id") % 10 === 9)
-    val agg = fn(stream)
-      .withColumn("ts", expr("timestamp_seconds(vec_id + 1)"))
-      .withWatermark("ts", "0 seconds")
+    val run = StreamRun(s, "graft_stream_cell_drift")
+    // the delta filter sits above the union, and Catalyst pushes it
+    // below the watermark node: the end-of-input row (cluster null)
+    // passes it, since StreamRun.EndOfInput ≡ 9 (mod 10)
+    val agg = run.idClock(fn(StreamRun.fileSource(s, dir, "embeddings")
+        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))),
+      "vec_id")
+      .filter(col("vec_id") % 10 === 9)
       .groupBy(window(col("ts"), "100 seconds"), col("cluster"))
       .agg(count(lit(1)).as("n_arrivals"))
-    val qname = "graft_stream_cell_drift"
-    s.catalog.dropTempView(qname)
-    val query = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
+    run.toMemory(agg).df
       .select(col("window.start").as("w_start"), col("cluster"),
         col("n_arrivals"))
       .orderBy(col("w_start"), col("cluster"))
@@ -2697,33 +2668,24 @@ object Similarity extends QueryModule {
     val idxPath = Dedup.scratchDir("graft-ann-idx")
     AnnIndex.save(s, corpus, idxPath)
     val fn = AnnIndex.assigner(s, idxPath)
-    val raw = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/embeddings.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/embeddings.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
-        .filter(col("vec_id") % 10 === 9)
-        .select(col("vec_id"), col("embedding"))
+    val stream = StreamRun.fileSource(s, dir, "embeddings")
+      .filter(col("vec_id") % 10 === 9)
+      .select(col("vec_id"), col("embedding"))
     val outPath = Dedup.scratchDir("graft-ann-out")
     // schema seed (the q185 device): an empty delta slice must leave
     // outPath readable
     fn(corpus.limit(0)).write.mode("overwrite").parquet(outPath)
-    val q = stream.writeStream
-      .option("checkpointLocation", Dedup.scratchDir("graft-ann-ckpt"))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // per batch: the per-row assignment and ONE flat parquet
-        // append (the exactly-once-store stand-in). r18 OPT: the
-        // index-partition append moved to day close below — the
-        // pre-r18 loop paid AnnIndex.append's repartition(cluster) +
-        // partitioned write PER MICRO-BATCH, exactly the work the
-        // scaladoc's "append postings at day close" posture defers;
-        // the index ends in the same state (same rows, epoch 0).
-        fn(batch).write.mode("append").parquet(outPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    StreamRun(s, "graft_stream_ann_ingest").foreachBatch(stream,
+        Dedup.scratchDir("graft-ann-ckpt")) { batch =>
+      // per batch: the per-row assignment and ONE flat parquet
+      // append (the exactly-once-store stand-in). r18 OPT: the
+      // index-partition append moved to day close below — the
+      // pre-r18 loop paid AnnIndex.append's repartition(cluster) +
+      // partitioned write PER MICRO-BATCH, exactly the work the
+      // scaladoc's "append postings at day close" posture defers;
+      // the index ends in the same state (same rows, epoch 0).
+      fn(batch).write.mode("append").parquet(outPath)
+    }
     AnnIndex.append(s.read.parquet(outPath), idxPath, epoch = 0L)
     s.read.parquet(outPath)
       .select(col("vec_id"), col("cluster"), col("c0"), col("c1"),

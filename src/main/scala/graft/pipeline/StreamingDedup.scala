@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.api.StreamRun
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -23,11 +24,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * watermark are dropped as late before reaching the op).
   */
 object StreamingDedup {
-
-  /** Watermark-driving sentinel event time (epoch seconds, year 2100).
-    * Real ids double as event-time seconds, so they must stay below
-    * this; both entry points assert it against the input's max id. */
-  private val SentinelSec = 4102444800L
 
   /** (band, bval) bucket member: micros, doc, SORTED distinct 64-bit
     * shingle hashes (hashed grams, not the strings — q54's argument:
@@ -67,50 +63,29 @@ object StreamingDedup {
         kept.map(tsUs(_) / 1000L).min + horizonSeconds.get * 1000L + 1, wmMs + 1))
   }
 
+  /** The documents stream (doc_id, text) on the id clock, sealed by
+    * an end-of-input row with `text` — the at-ingest shape shared with
+    * the q158 family. The default text has 3 words of a reserved
+    * token, so the row passes the shingle-length filters. */
+  private[pipeline] def sealedDocs(s: SparkSession, run: StreamRun, dir: String,
+      text: String = "zsentinela zsentinelb zsentinelc"): DataFrame =
+    run.idClock(StreamRun.fileSource(s, dir, "documents")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text")),
+      "doc_id", "text" -> lit(text))
+
   /** @param horizonSeconds dedup horizon: members sealed longer ago
     *   than this are evicted and can no longer match future arrivals —
     *   the windowed-recall trade-off that bounds state for unbounded
     *   streams (None = global dedup, state grows with the corpus). */
   def minhashDedup(s: SparkSession, dir: String, threshold: Double = 0.1,
-      horizonSeconds: Option[Long] = None): DataFrame = {
+      horizonSeconds: Option[Long] = None): StreamRun.Result = {
     import s.implicits._
-
-    val batch = s.read.parquet(s"$dir/documents.parquet")
-    val raw = batch.schema
-    // ids double as event-time seconds: a doc_id at or past the
-    // sentinel would stall sealing (the sentinel is no longer the max
-    // timestamp) — fail loudly instead. Parquet min/max stats make
-    // this a metadata-priced batch scan.
-    val maxId = batch.agg(max(col("doc_id").cast("long"))).head.getLong(0)
-    require(maxId + 1 < SentinelSec,
-      s"doc_id $maxId reaches the watermark sentinel epoch $SentinelSec")
-    implicit val sq = s.sqlContext
-    // far-future sentinel that drives the watermark past the last real
-    // document so it seals too. The sentinel must SURVIVE every filter
-    // below the watermark node: Catalyst pushes deterministic filters
-    // through the union+watermark down to the sources, and a filtered
-    // sentinel never registers its event time — the watermark then
-    // stalls at the last real row (exactly the bug this row exists to
-    // prevent). It therefore carries 3 words (passes the shingle-length
-    // filter) of a reserved token, lives in its own bucket, and — being
-    // the stream's maximum timestamp — never seals and is never an
-    // "earlier" candidate for anyone.
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    sentinel.addData((SentinelSec, "zsentinela zsentinelb zsentinelc"))
-    val fileDocs =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val docs = fileDocs
-      .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-      // synthetic arrival time: one doc per second in doc_id order,
-      // shifted +1s — a ts equal to the INITIAL watermark (epoch 0)
-      // is dropped as late before ever reaching the state op
-      .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-      .withWatermark("ts", "0 seconds")
+    val run = StreamRun(s, "graft_stream_minhash_dedup")
+    // the end-of-input row drives the watermark past the last real
+    // document so it seals too; its reserved tokens give it a bucket
+    // of its own, and as the stream's maximum timestamp it never seals
+    // and is never an "earlier" candidate for anyone
+    val docs = sealedDocs(s, run, dir)
 
     // per-row signature: band b's minhash = min over shingles of hex
     // slice [8b+1, 8b+8] of ONE precomputed md5 digest per shingle
@@ -188,10 +163,9 @@ object StreamingDedup {
     // one doc can match in several buckets → min over buckets. The
     // stream has completed by here (memory-sink collection), so this
     // final reduction is a plain batch aggregate.
-    StreamingDedup.viaMemorySink(s, pairs, "graft_stream_dedup")
-      .groupBy(col("doc_id"))
+    run.toMemory(pairs).map(_.groupBy(col("doc_id"))
       .agg(min(col("dup_of_bucket")).as("dup_of"))
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")))
   }
 
   /** Perceptual-hash dedup at ingest — the MULTIMODAL sibling of
@@ -210,32 +184,15 @@ object StreamingDedup {
     * is the member signature list — 16 bytes a member, bounded by
     * `horizonSeconds` for unbounded streams. */
   def phashDedup(s: SparkSession, dir: String, maxHamming: Int = 3,
-      horizonSeconds: Option[Long] = None): DataFrame = {
+      horizonSeconds: Option[Long] = None): StreamRun.Result = {
     import s.implicits._
     require(maxHamming <= 3,
       s"4-block pigeonhole is exact only to hamming 3, got $maxHamming")
-    val batch = s.read.parquet(s"$dir/documents.parquet")
-    val raw = batch.schema
-    val maxId = batch.agg(max(col("doc_id").cast("long"))).head.getLong(0)
-    require(maxId + 1 < SentinelSec,
-      s"doc_id $maxId reaches the watermark sentinel epoch $SentinelSec")
-    implicit val sq = s.sqlContext
-    // same survival rule as minhashDedup's sentinel; no filter exists
-    // below the watermark node here, and as the stream's maximum
-    // timestamp the sentinel never seals nor serves as a candidate
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    sentinel.addData((SentinelSec, "zsentinel"))
-    val fileDocs =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val docs = fileDocs
-      .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-      .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-      .withWatermark("ts", "0 seconds")
+    val run = StreamRun(s, "graft_stream_phash_dedup")
+    // no filter exists below the watermark node here, and as the
+    // stream's maximum timestamp the end-of-input row never seals nor
+    // serves as a candidate
+    val docs = sealedDocs(s, run, dir, "zsentinel")
       .withColumn("phash", graft.functions.MediaSig.dhash_sig(
         encode(col("text"), "UTF-8")))
 
@@ -287,10 +244,9 @@ object StreamingDedup {
 
     // a pair within hamming ≤ 3 can share up to 4 blocks → min over
     // buckets (same completed-stream batch reduction as the text side)
-    viaMemorySink(s, pairs, "graft_stream_phash_dedup")
-      .groupBy(col("doc_id"))
+    run.toMemory(pairs).map(_.groupBy(col("doc_id"))
       .agg(min(col("dup_of_bucket")).as("dup_of"))
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")))
   }
 
   /** Streaming embedding near-dup at ingest — the cosine sibling of
@@ -311,40 +267,24 @@ object StreamingDedup {
     * test so fp summation order cannot flip a bucket bit. */
   def embeddingNearDup(s: SparkSession, dir: String, threshold: Double = 0.25,
       horizonSeconds: Option[Long] = None,
-      signTables: Int = 0, signBits: Int = 2): DataFrame = {
+      signTables: Int = 0, signBits: Int = 2): StreamRun.Result = {
     import s.implicits._
-    val batch = s.read.parquet(s"$dir/embeddings.parquet")
-    val raw = batch.schema
-    val firstRow = batch.agg(max(col("vec_id").cast("long")).as("m"),
-      max(size(col("embedding"))).as("d")).head
-    val maxId = firstRow.getLong(0)
-    val dim = firstRow.getInt(1) // corpus embedding dimension
-    require(maxId + 1 < SentinelSec,
-      s"vec_id $maxId reaches the watermark sentinel epoch $SentinelSec")
-    implicit val sq = s.sqlContext
-    // same survival rule as [[minhashDedup]]'s sentinel: no filter may
-    // drop it below the watermark node. Label -1 gives it a bucket of
-    // its own under label blocking; under sign blocking it may share a
-    // bucket, which is still safe — as the max-timestamp row it never
-    // seals nor serves as an earlier candidate, so the short vector is
-    // never compared.
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Int, Seq[Float])]
-    // full-dim dummy vector: the fused vec_dot (unlike the old
-    // null-padding composite) requires length parity for the bucket
-    // projection; which bucket the sentinel lands in stays irrelevant
-    sentinel.addData((SentinelSec, -1, Seq.fill(dim)(1.0f)))
-    val fileVecs =
-      (if (new java.io.File(s"$dir/embeddings.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/embeddings.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "embeddings.parquet").parquet(dir))
+    val dim = s.read.parquet(s"$dir/embeddings.parquet") // corpus embedding dimension
+      .agg(max(size(col("embedding")))).head.getInt(0)
+    // label and sign blocking back different registry queries (q137,
+    // q139): one sink each
+    val run = StreamRun(s,
+      if (signTables == 0) "graft_stream_vec_dedup" else "graft_stream_vec_dedup_lsh")
+    // Label -1 gives the end-of-input row a bucket of its own under
+    // label blocking; under sign blocking it may share a bucket, which
+    // is still safe — as the max-timestamp row it never seals nor
+    // serves as an earlier candidate, so its dummy vector is never
+    // compared. The vector is full-dim all the same: the fused vec_dot
+    // requires length parity for the bucket projection.
+    val vecs0 = run.idClock(StreamRun.fileSource(s, dir, "embeddings")
         .select(col("vec_id").cast("long").as("vec_id"),
-          col("label").cast("int").as("label"), col("embedding"))
-    val vecs0 = fileVecs
-      .unionByName(sentinel.toDF().toDF("vec_id", "label", "embedding"))
-      .withColumn("ts", expr("timestamp_seconds(vec_id + 1)"))
-      .withWatermark("ts", "0 seconds")
+          col("label").cast("int").as("label"), col("embedding")),
+      "vec_id", "label" -> lit(-1), "embedding" -> typedlit(Seq.fill(dim)(1.0f)))
 
     // hyperplane j's component for dim i is ±1 by md5 parity; the
     // bucket of table t packs signBits rounded-dot signs into an int.
@@ -429,26 +369,8 @@ object StreamingDedup {
     // a vector can collide with its duplicate in several tables →
     // min across buckets (a no-op under label blocking, where every
     // vector lives in exactly one bucket)
-    viaMemorySink(s, pairs, "graft_stream_vec_dedup")
-      .groupBy(col("vec_id"))
+    run.toMemory(pairs).map(_.groupBy(col("vec_id"))
       .agg(min(col("dup_of_bucket")).as("dup_of"))
-      .orderBy(col("vec_id"))
-  }
-
-  /** State rows (= live bucket groups) reported by the final progress
-    * of the last memory-sink run — DedupSpec's probe that horizon
-    * eviction really removes quiescent buckets. */
-  @volatile private[pipeline] var lastStateRows: Long = -1L
-
-  private def viaMemorySink(s: SparkSession, df: DataFrame, qname: String): DataFrame = {
-    s.catalog.dropTempView(qname)
-    val query = df.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    lastStateRows = Option(query.lastProgress)
-      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-      .getOrElse(-1L)
-    query.stop()
-    s.table(qname)
+      .orderBy(col("vec_id")))
   }
 }

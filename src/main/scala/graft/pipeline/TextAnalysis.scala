@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.{QueryDef, QueryModule, Tables}
+import graft.api.StreamRun
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,11 +63,6 @@ object TextAnalysis extends QueryModule {
 
   private def duckHash(e: String): String =
     s"CAST(list_sum(list_transform(range(1,9), hx -> (strpos('0123456789abcdef', substr(md5($e), hx, 1))-1) * (2**(4*(8-hx))))) AS BIGINT)"
-
-  /** Watermark sentinel for q158: 2100-01-01T00:00Z as epoch seconds.
-    * Guarded at run time against testdata drift (max doc_id must stay
-    * below it, and it must dodge the eval-split residue). */
-  private val SentinelId = 4102444800L
 
   /** Distinct word 3-grams on a `w` array column (0-based Spark). */
   private val sparkGrams3 =
@@ -197,46 +193,20 @@ object TextAnalysis extends QueryModule {
 
   /** q158's engine: streaming decontamination with append-mode
     * windowed aggregation (see the q158 comment at the `queries`
-    * entry). Returns (result, stateRows) where stateRows is the
-    * state-operator row count from the query's final progress — the
-    * spec's probe that sealed (window, doc) groups really are
-    * EVICTED (≤ 1 live row: only the never-sealing sentinel's).
-    * Returning it here, from the run that produced it, avoids any
-    * shared mutable state between concurrent runs. */
-  private[pipeline] def decontamStream(s: SparkSession, dir: String): (DataFrame, Long) = {
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
+    * entry). The run's progress rides along with the result: its
+    * final state-operator row count is the spec's probe that sealed
+    * (window, doc) groups really are EVICTED (≤ 1 live row: only the
+    * never-sealing end-of-input row's). */
+  private[pipeline] def decontamStream(s: SparkSession, dir: String): StreamRun.Result = {
+    val run = StreamRun(s, "graft_stream_decontam")
     val docs = Tables.t(s, dir, "documents")
-    // sentinel guards against testdata drift: it must stay the max
-    // timestamp (else real windows stop sealing) and must dodge the
-    // eval-split residue filter. max(doc_id) prices as a parquet
-    // footer-stats scan, not a data read.
-    val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
-    require(maxId < SentinelId,
-      s"watermark sentinel $SentinelId no longer exceeds max doc_id " +
-        s"$maxId — the regenerated testdata outgrew the sentinel epoch")
-    require(SentinelId % 97 != 0,
-      "sentinel id collides with the eval-split residue (id % 97 == 0)")
     val evalGrams = docs
       .filter(col("doc_id") % 97 === 0)
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
       .select(explode(expr(sparkGrams3)).as("g")).distinct()
       .withColumn("hit", lit(1))
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    sentinel.addData((SentinelId, "zsentinela zsentinelb zsentinelc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val hits = stream
-      .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-      .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-      .withWatermark("ts", "0 seconds")
+    val hits = StreamingDedup.sealedDocs(s, run, dir)
       .filter(col("doc_id") % 97 =!= 0)
       .withColumn("w", split(col("text"), " "))
       .filter(size(col("w")) >= 3)
@@ -245,20 +215,10 @@ object TextAnalysis extends QueryModule {
       .groupBy(window(col("ts"), "1 second"), col("doc_id"))
       .agg(count(lit(1)).as("ng"), count(col("hit")).as("n_shared"))
       .drop("window")
-    s.catalog.dropTempView("graft_stream_decontam")
-    val query = hits.writeStream.format("memory")
-      .queryName("graft_stream_decontam").outputMode("append").start()
-    query.processAllAvailable()
-    val stateRows = Option(query.lastProgress)
-      .flatMap(p => p.stateOperators.headOption.map(_.numRowsTotal))
-      .getOrElse(-1L)
-    query.stop()
-    val out = s.table("graft_stream_decontam")
-      .filter(col("n_shared") >= 1)
+    run.toMemory(hits).map(_.filter(col("n_shared") >= 1)
       .select(col("doc_id"), col("ng").cast("int").as("n_grams"), col("n_shared"),
         round(col("n_shared").cast("double") / col("ng"), 6).as("contamination"))
-      .orderBy(col("doc_id"))
-    (out, stateRows)
+      .orderBy(col("doc_id")))
   }
 
   /** q243's engine: q240's attribution on q158's sealed-window
@@ -268,20 +228,15 @@ object TextAnalysis extends QueryModule {
     * the per-doc gram count rides each exploded row (size of the gram
     * array BEFORE the explode — the multi-benchmark join makes
     * count(*) per doc wrong for n_grams), and the hit join is INNER:
-    * clean docs never enter state. The sentinel only needs to reach
-    * the watermark NODE (directly above the union) — the watermark
-    * advances on observed event times, so dropping the sentinel's
+    * clean docs never enter state. The end-of-input row only needs to
+    * reach the watermark NODE (directly above the union) — the
+    * watermark advances on observed event times, so dropping its
     * grams at the join afterwards is safe where a pushed-down FILTER
-    * below the watermark node would not be (the q158 lesson). */
+    * below the watermark node would not be (StreamRun's guard). */
   private[pipeline] def streamContamAttribution(s: SparkSession,
       dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
+    val run = StreamRun(s, "graft_stream_contam_attr")
     val docs = Tables.t(s, dir, "documents")
-    val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
-    require(maxId < SentinelId,
-      s"watermark sentinel $SentinelId no longer exceeds max doc_id $maxId")
     val evB = docs
       .filter(col("doc_id") % 97 === 0)
       .withColumn("w", split(col("text"), " "))
@@ -294,19 +249,7 @@ object TextAnalysis extends QueryModule {
       // re-runs the batch-side broadcast subtree — materialize the
       // (suite-sized) eval gram table once for all batches
       .localCheckpoint()
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    sentinel.addData((SentinelId, "zsentinela zsentinelb zsentinelc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val hits = stream
-      .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-      .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-      .withWatermark("ts", "0 seconds")
+    val hits = StreamingDedup.sealedDocs(s, run, dir)
       .filter(col("doc_id") % 97 =!= 0)
       // r18 OPT (guide §2.5 input skew, the Tables.spread posture for
       // streams): the single-file source gives each micro-batch a 1-2
@@ -342,13 +285,7 @@ object TextAnalysis extends QueryModule {
         col("benchmark"))
       .agg(max(col("ng")).as("ng"), count(lit(1)).as("n_shared"))
       .drop("window")
-    val qname = "graft_stream_contam_attr"
-    s.catalog.dropTempView(qname)
-    val query = hits.writeStream.format("memory").queryName(qname)
-      .outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
+    run.toMemory(hits).df
       .select(col("doc_id"), col("benchmark"),
         col("ng").cast("int").as("n_grams"), col("n_shared"),
         round(col("n_shared").cast("double") / col("ng"), 6)
@@ -366,43 +303,25 @@ object TextAnalysis extends QueryModule {
     * multiple-stateful-operator support):
     *   1. per-(100 s window, word) counts — bounded per-window state,
     *      merged map-side, groups EVICT as the watermark passes
-    *      (q158 machinery, sentinel-driven);
+    *      (q158 machinery, end-of-input-driven);
     *   2. per-window top-3 via the bounded [[graft.functions.TopK]]
     *      aggregate (string-id variant) over each window's SEALED
     *      counts — ≤ k rows of agg state per window per task, so the
     *      exchange and the sink carry windows × k, never
     *      windows × vocab, and no WindowExec partitions on w_start.
     * The sink table holds one row per sealed window (its top-3
-    * array); ranking recovers via posexplode. The watermark sentinel
+    * array); ranking recovers via posexplode. The end-of-input row
     * (far-future ts) seals every real window; its own window never
     * seals, so it reaches neither the second aggregation nor the
     * sink.
     *
-    * Returns (result, stateRowsPerOperator) from the run's final
-    * progress — the spec's probe that sealed groups really evict
-    * (stage-1 live state = the sentinel's window only). */
-  private[pipeline] def trendingStream(s: SparkSession, dir: String)
-      : (DataFrame, Seq[Long]) = {
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
-    val docs = Tables.t(s, dir, "documents")
-    val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
-    require(maxId < SentinelId,
-      s"watermark sentinel $SentinelId no longer exceeds max doc_id $maxId")
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    sentinel.addData((SentinelId, "zsentinelword"))
-    val words =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-        .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-        .withWatermark("ts", "0 seconds")
-        .select(col("ts"), explode(split(lower(col("text")), " ")).as("word"))
+    * The run's final progress rides along with the result — the
+    * spec's probe that sealed groups really evict (stage-1 live state
+    * = the end-of-input row's window only). */
+  private[pipeline] def trendingStream(s: SparkSession, dir: String): StreamRun.Result = {
+    val run = StreamRun(s, "graft_stream_trending")
+    val words = StreamingDedup.sealedDocs(s, run, dir, "zsentinelword")
+      .select(col("ts"), explode(split(lower(col("text")), " ")).as("word"))
     val counts = words
       .groupBy(window(col("ts"), "100 seconds"), col("word"))
       .agg(count(lit(1)).as("n"))
@@ -410,22 +329,12 @@ object TextAnalysis extends QueryModule {
       .groupBy(window(col("window"), "100 seconds"))
       .agg(graft.functions.TopK.topKStr(3)(
         col("n").cast("double"), col("word")).as("topk"))
-    s.catalog.dropTempView("graft_stream_trending")
-    val query = top.writeStream.format("memory")
-      .queryName("graft_stream_trending").outputMode("append").start()
-    query.processAllAvailable()
-    val stateRows = Option(query.lastProgress)
-      .map(_.stateOperators.toSeq.map(_.numRowsTotal))
-      .getOrElse(Seq.empty)
-    query.stop()
-    val out = s.table("graft_stream_trending")
-      .select(col("window.start").as("w_start"),
+    run.toMemory(top).map(_.select(col("window.start").as("w_start"),
         posexplode(col("topk")).as(Seq("pos", "t")))
       .select(col("w_start"), col("t.id").as("word"),
         col("t.score").cast("bigint").as("n"),
         (col("pos") + 1).cast("int").as("rn"))
-      .orderBy(col("w_start"), col("rn"))
-    (out, stateRows)
+      .orderBy(col("w_start"), col("rn")))
   }
 
   /** Perplexity gating AT INGEST: arriving docs score against a
@@ -437,17 +346,11 @@ object TextAnalysis extends QueryModule {
     * aggregation whose groups evict as the watermark passes — the
     * q158 bounded-state ingest shape. At eval suites / LMs too large
     * to broadcast, the q160 bloom-prefilter escalation applies
-    * unchanged. The watermark sentinel survives every filter but
-    * carries no LM bigrams, so it seals with n = 0 and the final
-    * n ≥ 1 filter drops it. */
+    * unchanged. The end-of-input row survives every filter but
+    * carries no LM bigrams, so it never reaches the sink. */
   private[pipeline] def perplexityStream(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    implicit val sq = s.sqlContext
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
+    val run = StreamRun(s, "graft_stream_perplexity")
     val docs = Tables.t(s, dir, "documents")
-    val maxId = docs.agg(max(col("doc_id").cast("long"))).head.getLong(0)
-    require(maxId < SentinelId,
-      s"watermark sentinel $SentinelId no longer exceeds max doc_id $maxId")
     // frozen LM: the batch corpus's bigram/prefix counts (8-byte
     // hashes; word strings never shuffle)
     def bigrams(df: DataFrame) = df
@@ -475,19 +378,7 @@ object TextAnalysis extends QueryModule {
       .localCheckpoint()
     val cb = batchBi.groupBy(col("hb")).agg(count(lit(1)).as("cb"))
     val c1 = batchBi.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
-    val sentinel = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String)]
-    sentinel.addData((SentinelId, "zsentinela zsentinelb zsentinelc"))
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val scored = bigrams(stream
-        .unionByName(sentinel.toDF().toDF("doc_id", "text"))
-        .withColumn("ts", expr("timestamp_seconds(doc_id + 1)"))
-        .withWatermark("ts", "0 seconds"))
+    val scored = bigrams(StreamingDedup.sealedDocs(s, run, dir))
       .join(broadcast(cb), Seq("hb"), "left")
       .join(broadcast(c1), Seq("h1"), "left")
       .withColumn("term",
@@ -506,12 +397,7 @@ object TextAnalysis extends QueryModule {
         .as("hsum_mic"),
         count(col("term")).as("n"))
       .drop("window")
-    s.catalog.dropTempView("graft_stream_perplexity")
-    val query = scored.writeStream.format("memory")
-      .queryName("graft_stream_perplexity").outputMode("append").start()
-    query.processAllAvailable()
-    query.stop()
-    s.table("graft_stream_perplexity")
+    run.toMemory(scored).df
       .filter(col("n") >= 1)
       .withColumn("hsum", col("hsum_mic").cast("double") / lit(1e6))
       .select(col("doc_id"), col("n").cast("int").as("n_bigrams"),
@@ -604,26 +490,17 @@ object TextAnalysis extends QueryModule {
     * is computed batch-side: it is the VERIFICATION harness, not the
     * sketch (a production stream serves estimates for ad-hoc terms). */
   private[pipeline] def cmsStream(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream =
-      (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir))
-        .select(explode(split(lower(col("text")), " ")).as("word"))
+    val stream = StreamRun.fileSource(s, dir, "documents")
+      .select(explode(split(lower(col("text")), " ")).as("word"))
     val cells = stream
       .select((col("word") +: (0 to 3).map(cmsSlice)): _*)
       .select(posexplode(array((0 to 3).map(j => col(s"h$j")): _*))
         .as(Seq("j", "b")))
       .groupBy(col("j"), col("b")).agg(count(lit(1)).as("c"))
-    s.catalog.dropTempView("graft_stream_cms")
-    val query = cells.writeStream.format("memory")
-      .queryName("graft_stream_cms").outputMode("complete").start()
-    query.processAllAvailable()
-    query.stop()
+    val sketch = StreamRun(s, "graft_stream_cms").toMemory(cells, "complete").df
     val w = Tables.t(s, dir, "documents")
       .select(explode(split(lower(col("text")), " ")).as("word"))
-    cmsEstimates(w, s.table("graft_stream_cms"))
+    cmsEstimates(w, sketch)
   }
 
   /** q177's probe knob, read ONCE and consulted by both the Spark
@@ -966,8 +843,8 @@ object TextAnalysis extends QueryModule {
     // and per-(1s-window, doc, benchmark) counts finalize in an
     // append-mode event-time aggregation that seals and EVICTS as the
     // watermark passes — bounded state on an unbounded ingest stream.
-    // The sentinel survives to the watermark node (its grams then
-    // drop at the join, AFTER its timestamp was observed — the
+    // The end-of-input row survives to the watermark node (its grams
+    // then drop at the join, AFTER its timestamp was observed — the
     // watermark advances on observed event times, not on rows
     // reaching the sink). Identical result to batch q240, so it
     // shares the oracle. -----
@@ -1105,13 +982,13 @@ object TextAnalysis extends QueryModule {
     // the watermark passes it and is EVICTED from state — bounded
     // state on an unbounded ingest stream, unlike a complete-mode
     // running aggregate whose state grows with every doc ever seen.
-    // The far-future sentinel (StreamingDedup's discipline: it must
-    // survive every pushed-down filter — id ≡ 35 mod 97, 3 words —
-    // and, being the max timestamp, never seals itself) drives the
-    // watermark past the last real document. Identical result to
+    // The end-of-input row (it must survive every pushed-down filter
+    // — StreamRun.EndOfInput is not ≡ 0 mod 97, and its text has 3
+    // words — and, being the max timestamp, never seals itself)
+    // drives the watermark past the last real document. Identical result to
     // batch q155, so it shares the oracle. -----
     q("q158_stream_decontam", decontamOracle) { (s, dir) =>
-      decontamStream(s, dir)._1
+      decontamStream(s, dir).df
     },
 
     // ----- quota sampling for training-mix balancing: cap each
@@ -1189,12 +1066,7 @@ object TextAnalysis extends QueryModule {
         |  CAST(CASE WHEN quality > 0.5 AND dup2 <= 0.06 AND topw <= 0.2
         |       THEN 1 ELSE 0 END AS INTEGER) AS keep
         |FROM m ORDER BY doc_id""") { (s, dir) =>
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream =
-        (if (new java.io.File(s"$dir/documents.parquet").isDirectory)
-          s.readStream.schema(raw).parquet(s"$dir/documents.parquet")
-        else s.readStream.schema(raw)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
+      val stream = StreamRun.fileSource(s, dir, "documents")
       val dup2 = lit(1.0) -
         size(array_distinct(expr("transform(sequence(0, size(w)-2), i -> concat(w[i], ' ', w[i+1]))")))
           .cast("double") / (size(col("w")) - 1)
@@ -1210,12 +1082,8 @@ object TextAnalysis extends QueryModule {
           col("clean_hash"),
           when(col("quality") > 0.5 && col("dup2") <= 0.06 && col("topw") <= 0.2, 1)
             .otherwise(0).as("keep"))
-      s.catalog.dropTempView("graft_stream_gate")
-      val query = gated.writeStream.format("memory")
-        .queryName("graft_stream_gate").outputMode("append").start()
-      query.processAllAvailable()
-      query.stop()
-      s.table("graft_stream_gate").orderBy(col("doc_id"))
+      StreamRun(s, "graft_stream_curation_gate").toMemory(gated).df
+        .orderBy(col("doc_id"))
     },
 
     // ----- embedding QC: per-vector dimension / L2 norm / zero- and
@@ -1885,7 +1753,7 @@ object TextAnalysis extends QueryModule {
         |        ORDER BY n DESC, word) AS rn FROM c)
         |SELECT w_start, word, CAST(n AS BIGINT) AS n, CAST(rn AS INTEGER) AS rn
         |FROM r WHERE rn <= 3 ORDER BY w_start, rn""") { (s, dir) =>
-      trendingStream(s, dir)._1
+      trendingStream(s, dir).df
     },
 
     // ----- token-budgeted mix construction: the final assembly step

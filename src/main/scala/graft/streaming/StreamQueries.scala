@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.{QueryDef, QueryModule, Tables}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import graft.api.StreamRun
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.DecimalType
@@ -24,41 +25,20 @@ import org.apache.spark.sql.types.DecimalType
   */
 object StreamQueries extends QueryModule {
 
-  /** Streaming view of events.parquet (same ns→µs handling as
-    * Tables.t, which file-source schemas must pre-declare). */
+  /** Streaming view of events.parquet (the same ts handling as
+    * Tables.t). */
   private def streamEvents(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet").schema
-    // driver testdata ships events.parquet as a single FILE (file
-    // source needs the parent dir + a glob); rewritten copies
-    // (tools.Scale) are parquet DIRECTORIES readable directly
-    val st =
-      if (new java.io.File(s"$dir/events.parquet").isDirectory)
-        s.readStream.schema(raw).parquet(s"$dir/events.parquet")
-      else s.readStream.schema(raw)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
-    raw("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        st.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // naive µs generation: cast through the pinned-UTC session
-        // zone so watermarks/event-time see TimestampType as before
-        st.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => st
-    }
+    Tables.eventTime(StreamRun.fileSource(s, dir, "events"))
   }
 
-  /** Run a streaming DF to completion into a memory sink; return the
-    * sink table (the query's final state). */
-  private def viaMemorySink(s: SparkSession, df: DataFrame, mode: String,
-      qname: String): DataFrame = {
-    s.catalog.dropTempView(qname)
-    val query = df.writeStream.format("memory").queryName(qname)
-      .outputMode(mode).start()
-    query.processAllAvailable()
-    query.stop()
-    s.table(qname)
-  }
+  /** `ev` sealed by its end-of-input row, which every result filters
+    * back out by its event and user id -1 (value 0.0, other columns
+    * from `fill`). */
+  private def endOfEvents(run: StreamRun, ev: DataFrame,
+      fill: (String, Column)*): DataFrame =
+    run.endOfInput(ev, "ts", Seq("event_id" -> lit(-1L),
+      "user_id" -> lit(-1L), "value" -> lit(0.0)) ++ fill: _*)
 
   private val H6 = 6 * 3600 * 1000L  // 6h in ms
   private val H2 = 2 * 3600 * 1000L
@@ -181,21 +161,17 @@ object StreamQueries extends QueryModule {
         |SELECT user_id, min(ts) AS w_start, count(*) AS n
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, w_start""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L, "view"))
+      val run = StreamRun(s, "graft_stream_sess_dyn")
       val gap = when(col("event_type") === "error", "10 minutes")
         .otherwise("30 minutes")
-      val agg = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id", "event_type"))
+      val agg = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
+          "event_type" -> lit("view"))
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), gap), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"), col("session_window.start").as("w_start"), col("n"))
-      viaMemorySink(s, agg, "append", "graft_stream_sess_dyn")
+      run.toMemory(agg).df
         .filter(col("user_id") =!= -1L)
         .orderBy(col("user_id"), col("w_start"))
     },
@@ -213,7 +189,7 @@ object StreamQueries extends QueryModule {
         .groupBy(window(col("ts"), "6 hours"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("w_start"), col("event_type"), col("n"))
-      viaMemorySink(s, agg, "complete", "graft_stream_tumble")
+      StreamRun(s, "graft_stream_tumble").toMemory(agg, "complete").df
         .orderBy(col("w_start"), col("event_type"))
     },
 
@@ -225,7 +201,7 @@ object StreamQueries extends QueryModule {
         .withWatermark("ts", "1 hour")
         .select(col("user_id"), col("event_type"))
         .dropDuplicates("user_id", "event_type")
-      viaMemorySink(s, dedup, "append", "graft_stream_dedup")
+      StreamRun(s, "graft_stream_dedup").toMemory(dedup).df
         .orderBy(col("user_id"), col("event_type"))
     },
 
@@ -245,7 +221,7 @@ object StreamQueries extends QueryModule {
       // exact count(distinct) is unsupported on streams; run approx in
       // the stream (scale path) and recompute exact on the final state
       // micro-table for oracle parity
-      val fin = viaMemorySink(s, agg, "complete", "graft_stream_agg")
+      val fin = StreamRun(s, "graft_stream_agg").toMemory(agg, "complete").df
       val exact = Tables.t(s, dir, "events")
         .groupBy(col("event_type"))
         .agg(countDistinct(col("user_id")).as("n_users"))
@@ -301,7 +277,7 @@ object StreamQueries extends QueryModule {
         .withColumn("nk", (col("user_id") % 25).cast("int"))
         .join(broadcast(dim), col("nk") === col("n_nationkey"))
         .groupBy(col("n_name")).agg(count(lit(1)).as("n"))
-      viaMemorySink(s, joined, "complete", "graft_stream_static")
+      StreamRun(s, "graft_stream_static").toMemory(joined, "complete").df
         .orderBy(col("n_name"))
     },
 
@@ -345,7 +321,7 @@ object StreamQueries extends QueryModule {
           && col("e_ts") >= col("p_ts") - expr("INTERVAL 30 MINUTES")
           && col("e_ts") <= col("p_ts"))
         .select(col("purchase_id"), col("error_id"))
-      viaMemorySink(s, joined, "append", "graft_stream_ij")
+      StreamRun(s, "graft_stream_ij").toMemory(joined).df
         .orderBy(col("purchase_id"), col("error_id"))
     },
 
@@ -361,26 +337,24 @@ object StreamQueries extends QueryModule {
         |       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS running_n
         |FROM events ORDER BY event_id""") { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      val outPath = "/root/repo/target/roundtrip/q76_over"
-      new java.io.File(outPath).delete()
+      import graft.pipeline.Dedup.scratchDir
+      val outPath = scratchDir("graft-q76-over")
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-      val query = streamEvents(s, dir).writeStream.foreachBatch {
-        (df: DataFrame, _: Long) =>
-          df.withColumn("rn", row_number().over(w))
-            .withColumn("running_n",
-              count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-            .select(col("event_id"), col("rn"), col("running_n"))
-            .write.mode("overwrite").parquet(outPath)
-      }.start()
-      query.processAllAvailable()
-      query.stop()
+      StreamRun(s, "graft_stream_over_batch").foreachBatch(streamEvents(s, dir),
+          scratchDir("graft-q76-ckpt")) { df =>
+        df.withColumn("rn", row_number().over(w))
+          .withColumn("running_n",
+            count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+          .select(col("event_id"), col("rn"), col("running_n"))
+          .write.mode("overwrite").parquet(outPath)
+      }
       s.read.parquet(outPath).orderBy(col("event_id"))
     },
 
     // ----- stream-stream LEFT OUTER interval join (reference
     // NonWindowLeftRightJoin/TimeBoundedStreamJoin): unmatched left
     // rows emit only once the watermark seals their join window, so a
-    // far-future sentinel row (filtered back out) flushes the tail -----
+    // far-future end-of-input row (filtered back out) flushes the tail -----
     q("q83_stream_outer_join",
       """SELECT p.event_id AS purchase_id, e.event_id AS error_id
         |FROM events p LEFT JOIN events e
@@ -388,26 +362,16 @@ object StreamQueries extends QueryModule {
         | AND e.ts BETWEEN p.ts - INTERVAL 30 MINUTE AND p.ts
         |WHERE p.event_type = 'purchase'
         |ORDER BY purchase_id, error_id NULLS FIRST""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
-      val sentinelDf = sentinel.toDF().toDF("event_id", "ts", "user_id")
-
-      val p = streamEvents(s, dir).filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .unionByName(sentinelDf)
+      val run = StreamRun(s, "graft_stream_oj")
+      // the stream watermark is the min across inputs, so each side
+      // needs its own end-of-input row or unmatched-left emission stalls
+      def side(t: String) = endOfEvents(run, streamEvents(s, dir)
+        .filter(col("event_type") === t)
+        .select(col("event_id"), col("ts"), col("user_id")))
+      val p = side("purchase")
         .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
         .withWatermark("p_ts", "1 minute")
-      // the stream watermark is the min across inputs, so the right
-      // side needs its own sentinel or unmatched-left emission stalls
-      val sentinelR = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long)]
-      sentinelR.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
-      val e = streamEvents(s, dir).filter(col("event_type") === "error")
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .unionByName(sentinelR.toDF().toDF("event_id", "ts", "user_id"))
+      val e = side("error")
         .select(col("event_id").as("error_id"), col("user_id").as("e_user"), col("ts").as("e_ts"))
         .withWatermark("e_ts", "1 minute")
       val joined = p.join(e,
@@ -416,7 +380,7 @@ object StreamQueries extends QueryModule {
             && col("e_ts") <= col("p_ts"),
           "left_outer")
         .select(col("purchase_id"), col("error_id"))
-      viaMemorySink(s, joined, "append", "graft_stream_oj")
+      run.toMemory(joined).df
         .filter(col("purchase_id") =!= -1L)
         .orderBy(col("purchase_id"), col("error_id").asc_nulls_first)
     },
@@ -436,16 +400,11 @@ object StreamQueries extends QueryModule {
         |ORDER BY view_id""") { (s, dir) =>
       import s.implicits._
       import graft.cep.CEP
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        -1L, "noise"))
+      val run = StreamRun(s, "graft_cep_timeouts")
       type Ev = (Long, java.sql.Timestamp, Long, String)
-      val ev: Dataset[Ev] = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .unionByName(sentinel.toDF()
-          .toDF("event_id", "ts", "user_id", "event_type"))
+      val ev: Dataset[Ev] = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
+          "event_type" -> lit("noise"))
         .withWatermark("ts", "0 seconds")
         .as[(Long, java.sql.Timestamp, Long, String)]
       val p = CEP.Pattern.begin[Ev]("view").where(_._4 == "view")
@@ -459,8 +418,7 @@ object StreamQueries extends QueryModule {
       } { (uid, partial) =>
         (uid, partial.stages("view").head._1, true)
       }
-      viaMemorySink(s, tagged.toDF("user_id", "view_id", "timed_out"),
-          "append", "graft_cep_timeouts")
+      run.toMemory(tagged.toDF("user_id", "view_id", "timed_out")).df
         .filter(col("timed_out") && col("user_id") >= 0)
         .select(col("user_id"), col("view_id"))
         .orderBy(col("view_id"))
@@ -483,16 +441,10 @@ object StreamQueries extends QueryModule {
         |FROM seq WHERE event_type = 'view' AND nt = 'purchase'
         |  AND nts < ts + INTERVAL 1 HOUR
         |ORDER BY view_id""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        -1L, "noise"))
-      val ev = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .unionByName(sentinel.toDF()
-          .toDF("event_id", "ts", "user_id", "event_type"))
+      val run = StreamRun(s, "graft_match_stream")
+      val ev = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
+          "event_type" -> lit("noise"))
         .withWatermark("ts", "0 seconds")
       val matched = graft.cep.MatchRecognize.stream(ev,
         """PARTITION BY user_id
@@ -502,7 +454,7 @@ object StreamQueries extends QueryModule {
           |WITHIN INTERVAL '1' HOUR
           |DEFINE A AS A.event_type = 'view', B AS B.event_type = 'purchase'"""
           .stripMargin)
-      viaMemorySink(s, matched, "append", "graft_match_stream")
+      run.toMemory(matched).df
         .filter(col("user_id") >= 0)
         .orderBy(col("view_id"))
     },
@@ -525,16 +477,10 @@ object StreamQueries extends QueryModule {
         |    WHERE m.user_id = a.user_id AND m.rn > a.rn AND m.rn < b.rn
         |      AND m.event_type <> 'click')
         |ORDER BY a.user_id, start_id""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, String)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        -1L, "noise"))
-      val ev = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-        .unionByName(sentinel.toDF()
-          .toDF("event_id", "ts", "user_id", "event_type"))
+      val run = StreamRun(s, "graft_match_skipto_stream")
+      val ev = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type")),
+          "event_type" -> lit("noise"))
         .withWatermark("ts", "0 seconds")
       val matched = graft.cep.MatchRecognize.stream(ev,
         """PARTITION BY user_id
@@ -545,7 +491,7 @@ object StreamQueries extends QueryModule {
           |WITHIN INTERVAL '1' DAY
           |DEFINE V AS V.event_type = 'view', C AS C.event_type = 'click',
           |       W AS W.event_type = 'view'""".stripMargin)
-      viaMemorySink(s, matched, "append", "graft_match_skipto_stream")
+      run.toMemory(matched).df
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("start_id"))
     },
@@ -564,18 +510,12 @@ object StreamQueries extends QueryModule {
         |  FROM events p WHERE p.event_type = 'purchase')
         |SELECT event_id, rate FROM j WHERE rate IS NOT NULL
         |ORDER BY event_id""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, String, Double)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        -1L, "signup", 0.0))
-      val ev = streamEvents(s, dir)
-        .filter(col("event_type").isin("signup", "purchase"))
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .unionByName(sentinel.toDF()
-          .toDF("event_id", "ts", "user_id", "event_type", "value"))
+      val run = StreamRun(s, "graft_temporal_join")
+      val ev = endOfEvents(run, streamEvents(s, dir)
+          .filter(col("event_type").isin("signup", "purchase"))
+          .select(col("event_id"), col("ts"), col("user_id"),
+            col("event_type"), col("value")),
+        "event_type" -> lit("signup"))
       // registered the way the reference's Table API users write it:
       // build.createTemporalTableFunction + probe.joinLateralAsOf
       // (graft.table.Table → the same TemporalJoin.rowTime state op)
@@ -588,7 +528,7 @@ object StreamQueries extends QueryModule {
           .select(col("user_id"), col("ts"), col("event_id")))
         .joinLateralAsOf(rates, "ts", "user_id", "event_id", "0 seconds")
         .toDF
-      viaMemorySink(s, joined, "append", "graft_temporal_join")
+      run.toMemory(joined).df
         .filter(col("event_id") >= 0)
         .select(col("event_id"), col("value").as("rate"))
         .orderBy(col("event_id"))
@@ -607,14 +547,9 @@ object StreamQueries extends QueryModule {
         |    4) AS DOUBLE) AS run_sum
         |FROM events ORDER BY event_id""") { (s, dir) =>
       import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        -1L, 0.0))
-      val ev = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id", "value"))
+      val run = StreamRun(s, "graft_over_rowtime")
+      val ev = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("value")))
         .withWatermark("ts", "0 seconds")
         .select(col("user_id").as("key"), col("ts"),
           unix_micros(col("ts")).as("tsUs"), col("event_id").as("seq"),
@@ -622,7 +557,7 @@ object StreamQueries extends QueryModule {
         .as[RowTimeOver.OvEvent]
       val summed = RowTimeOver.boundedRangeSum(ev, 3600L * 1000000L)
         .toDF("event_id", "sum_raw")
-      viaMemorySink(s, summed, "append", "graft_over_rowtime")
+      run.toMemory(summed).df
         .filter(col("event_id") >= 0)
         .select(col("event_id"),
           moneyOut(col("sum_raw").cast(DecimalType(38, 4))).as("run_sum"))
@@ -641,14 +576,9 @@ object StreamQueries extends QueryModule {
         |    4) AS DOUBLE) AS run_sum
         |FROM events ORDER BY event_id""") { (s, dir) =>
       import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long, Double)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"),
-        -1L, 0.0))
-      val ev = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-        .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id", "value"))
+      val run = StreamRun(s, "graft_over_rows")
+      val ev = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id"), col("value")))
         .withWatermark("ts", "0 seconds")
         .select(col("user_id").as("key"), col("ts"),
           unix_micros(col("ts")).as("tsUs"), col("event_id").as("seq"),
@@ -656,7 +586,7 @@ object StreamQueries extends QueryModule {
         .as[RowTimeOver.OvEvent]
       val summed = RowTimeOver.boundedRowsSum(ev, 3)
         .toDF("event_id", "sum_raw")
-      viaMemorySink(s, summed, "append", "graft_over_rows")
+      run.toMemory(summed).df
         .filter(col("event_id") >= 0)
         .select(col("event_id"),
           moneyOut(col("sum_raw").cast(DecimalType(38, 4))).as("run_sum"))
@@ -685,7 +615,7 @@ object StreamQueries extends QueryModule {
         .keyBy(_._1)
         .punctuatedSeal(_._2.getTime, _._3)(_._4 == "click")
         .map(_._3)
-      viaMemorySink(s, sealedEv.toDF("event_id"), "append", "graft_punct_seal")
+      StreamRun(s, "graft_punct_seal").toMemory(sealedEv.toDF("event_id")).df
         .orderBy(col("event_id"))
     },
 
@@ -701,36 +631,27 @@ object StreamQueries extends QueryModule {
         | AND v.event_type = 'view' AND p.event_type = 'purchase'
         | AND (epoch_ms(v.ts) // 3600000) = (epoch_ms(p.ts) // 3600000)
         |ORDER BY view_id, purchase_id""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      def sentinel() = {
-        val m = org.apache.spark.sql.execution.streaming.runtime
-          .MemoryStream[(Long, java.sql.Timestamp, Long)]
-        m.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
-        m.toDF().toDF("event_id", "ts", "user_id")
-      }
-      val v = streamEvents(s, dir).filter(col("event_type") === "view")
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .unionByName(sentinel())
+      val run = StreamRun(s, "graft_window_join")
+      def side(t: String) = endOfEvents(run, streamEvents(s, dir)
+          .filter(col("event_type") === t)
+          .select(col("event_id"), col("ts"), col("user_id")))
         .withWatermark("ts", "1 minute")
+      val v = side("view")
         .select(col("event_id").as("view_id"), col("user_id").as("v_user"),
           window(col("ts"), "1 hour").as("vw"))
-      val p = streamEvents(s, dir).filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .unionByName(sentinel())
-        .withWatermark("ts", "1 minute")
+      val p = side("purchase")
         .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
           window(col("ts"), "1 hour").as("pw"))
       val joined = v.join(p,
           col("v_user") === col("p_user") && col("vw") === col("pw"))
         .select(col("view_id"), col("purchase_id"))
-      viaMemorySink(s, joined, "append", "graft_window_join")
+      run.toMemory(joined).df
         .filter(col("view_id") =!= -1L)
         .orderBy(col("view_id"), col("purchase_id"))
     },
 
     // ----- STREAMING session windows (q42 is the batch run of the
-    // same assigner); sentinel flush seals every session under the
+    // same assigner); the end-of-input row seals every session under the
     // watermark so append mode emits the complete final state -----
     q("q84_stream_session",
       """WITH g AS (
@@ -743,19 +664,14 @@ object StreamQueries extends QueryModule {
         |SELECT user_id, min(ts) AS w_start, count(*) AS n
         |FROM s GROUP BY user_id, sid
         |ORDER BY user_id, w_start""") { (s, dir) =>
-      import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Long)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), -1L))
-      val agg = streamEvents(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"))
-        .unionByName(sentinel.toDF().toDF("event_id", "ts", "user_id"))
+      val run = StreamRun(s, "graft_stream_sess")
+      val agg = endOfEvents(run, streamEvents(s, dir)
+          .select(col("event_id"), col("ts"), col("user_id")))
         .withWatermark("ts", "1 minute")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n"))
         .select(col("user_id"), col("session_window.start").as("w_start"), col("n"))
-      viaMemorySink(s, agg, "append", "graft_stream_sess")
+      run.toMemory(agg).df
         .filter(col("user_id") =!= -1L)
         .orderBy(col("user_id"), col("w_start"))
     },
@@ -782,20 +698,17 @@ object StreamQueries extends QueryModule {
         |GROUP BY user_id, w_start
         |ORDER BY user_id, w_start""") { (s, dir) =>
       import s.implicits._
-      implicit val sq = s.sqlContext
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp, Double)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00"), 0.0))
-      val ev = streamEvents(s, dir)
-        .select(col("user_id"), col("ts"), round(col("value") * 10000).as("c"))
-        .unionByName(sentinel.toDF().toDF("user_id", "ts", "c"))
+      val run = StreamRun(s, "graft_trigger_final")
+      val ev = endOfEvents(run, streamEvents(s, dir)
+          .select(col("user_id"), col("ts"), round(col("value") * 10000).as("c")),
+          "c" -> lit(0.0))
         .withWatermark("ts", "1 minute")
         .as[(Long, java.sql.Timestamp, Double)]
       val fired = graft.streaming.Triggers.earlyFiringTumble(
         ev, windowMillis = 6 * 3600 * 1000L,
         evictor = graft.streaming.Triggers.CountEvictor(20))
       val df = fired.toDF("user_id", "w_start", "n", "sum_cents", "is_final")
-      viaMemorySink(s, df, "append", "graft_trigger_final")
+      run.toMemory(df).df
         .filter(col("is_final") && col("user_id") =!= -1L)
         .select(col("user_id"), col("w_start"), col("n"),
           (col("sum_cents") / 10000).as("sum_value"))
@@ -824,7 +737,7 @@ object StreamQueries extends QueryModule {
           max(col("v")).as("max_value"),
           min_by(col("event_id"), struct(col("v"), col("event_id"))).as("min_event"),
           min(col("v")).as("min_value"))
-      viaMemorySink(s, agg, "complete", "graft_stream_minmax")
+      StreamRun(s, "graft_stream_minmax").toMemory(agg, "complete").df
         .orderBy(col("user_id"))
     },
 
@@ -833,17 +746,13 @@ object StreamQueries extends QueryModule {
     q("q85_stream_file_sink",
       """SELECT event_type, count(*) AS n FROM events
         |GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
-      val out = "/root/repo/target/roundtrip/q85_sink"
-      val chk = "/root/repo/target/roundtrip/q85_chk"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(chk))
-      val query = streamEvents(s, dir)
-        .select(col("event_id"), col("event_type"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", chk)
-        .outputMode("append").start()
-      query.processAllAvailable()
-      query.stop()
+      import graft.pipeline.Dedup.scratchDir
+      val out = scratchDir("graft-q85-sink")
+      val ev = streamEvents(s, dir).select(col("event_id"), col("event_type"))
+      StreamRun(s, "graft_stream_file_sink").drain(ev, ev.writeStream
+        .format("parquet").option("path", out)
+        .option("checkpointLocation", scratchDir("graft-q85-ckpt"))
+        .outputMode("append"))
       s.read.parquet(out)
         .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
         .orderBy(col("event_type"))
@@ -853,7 +762,7 @@ object StreamQueries extends QueryModule {
     // purchases as two typed streams, coGrouped per (user, 1h tumbling
     // window); both sides' full element lists arrive together, and a
     // window fires even when one side is empty — the outer behavior a
-    // windowed join lacks. The sentinel rides the LEFT side (user -1)
+    // windowed join lacks. The end-of-input row rides the LEFT side (user -1)
     // to seal the final windows. -----
     q("q151_stream_cogroup",
       """WITH e AS (SELECT user_id, event_type,
@@ -868,25 +777,20 @@ object StreamQueries extends QueryModule {
         |ORDER BY user_id, win""") { (s, dir) =>
       import s.implicits._
       import graft.api.StreamOps
-      implicit val sq = s.sqlContext
       type Ev = (Long, java.sql.Timestamp)
-      val sentinel = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(Long, java.sql.Timestamp)]
-      sentinel.addData((-1L, java.sql.Timestamp.valueOf("2030-01-01 00:00:00")))
+      val run = StreamRun(s, "graft_stream_cogroup")
       val base = streamEvents(s, dir)
       def side(t: String) = base.filter(col("event_type") === t)
         .select(col("user_id").cast("long"), col("ts"))
       val left = new StreamOps(
-        side("view").unionByName(sentinel.toDF().toDF("user_id", "ts"))
-          .as[(Long, java.sql.Timestamp)])
+        endOfEvents(run, side("view")).as[(Long, java.sql.Timestamp)])
       val right = new StreamOps(side("purchase").as[(Long, java.sql.Timestamp)])
       val cg = left.coGroup(right)((l: Ev) => l._1, (r: Ev) => r._1)(
         3600 * 1000L, (l: Ev) => l._2.getTime, (r: Ev) => r._2.getTime) {
         (uid, ws, views, purchases) =>
           Iterator((uid, ws, views.size.toLong, purchases.size.toLong))
       }
-      viaMemorySink(s, cg.toDF("user_id", "win", "views", "purchases"),
-          "append", "graft_stream_cogroup")
+      run.toMemory(cg.toDF("user_id", "win", "views", "purchases")).df
         .filter(col("user_id") >= 0)
         .orderBy(col("user_id"), col("win"))
     },
@@ -910,8 +814,8 @@ object StreamQueries extends QueryModule {
         .as[(Long, Long, Long)]
       val reduced = new StreamOps(ev).keyBy(_._1)
         .reduce((a, b) => (a._1, math.max(a._2, b._2), a._3 + b._3))
-      viaMemorySink(s, reduced.toDF("user_id", "kv"),
-          "complete", "graft_stream_keyed_reduce")
+      StreamRun(s, "graft_stream_keyed_reduce")
+        .toMemory(reduced.toDF("user_id", "kv"), "complete").df
         .select(col("user_id"), col("kv._2").as("max_event"),
           col("kv._3").as("n"))
         .orderBy(col("user_id"))

@@ -81,10 +81,10 @@ object Scale {
 
     val K = 100000000L // replica key shift
     // doc/vec ids double as event-time SECONDS in the streaming dedup
-    // ops, which fail loudly when an id reaches the year-2100 watermark
-    // sentinel (4.1e9). documents/embeddings are small tables, so a
-    // 1e6 shift keeps replicas distinct while 100x tops out at ~1e8 —
-    // far below the sentinel; the big fact tables keep the wide shift.
+    // ops, which fail loudly when an id reaches StreamRun.EndOfInput
+    // (4.1e9). documents/embeddings are small tables, so a 1e6 shift
+    // keeps replicas distinct while 100x tops out at ~1e8 — far below
+    // end-of-input; the big fact tables keep the wide shift.
     val D = 1000000L
     // fact tables replicate with shifted keys; dims stay as-is so
     // join fan-in grows like the data (the realistic shape)

@@ -759,4 +759,59 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("TakeOrderedAndProject"),
       "the k boundary must be a bounded TopK, not a global sort+limit")
   }
+
+  /** Executed plans of every SQL execution `body` runs, stream
+    * micro-batches included. A marker execution after `body` flushes
+    * the listener queue (events arrive in posting order). */
+  private def executedPlans(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); seen.add(qe)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      val marker = spark.range(1)
+      marker.collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(marker.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker.queryExecution), "listener queue did not drain")
+    } finally spark.listenerManager.unregister(listener)
+    scala.jdk.CollectionConverters.IterableHasAsScala(plans).asScala.toSeq
+  }
+
+  test("q243 evaluates its gram expression once, above the stream repartition's exchange") {
+    // The InferFiltersFromGenerate coupling (TextAnalysis
+    // streamContamAttribution): a projected gram array + explode lets
+    // the rule infer size(grams) > 0, inline the whole gram expression
+    // into that filter and push it below the doc-sized repartition —
+    // a second, pre-shuffle evaluation on the 1-2-task source stage.
+    // The inline struct generator must stay the only evaluation.
+    import org.apache.spark.sql.catalyst.expressions.Sequence
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val plans = executedPlans {
+      Registry.all.find(_.name == "q243_stream_contam_attribution").get
+        .fn(spark, sf).collect()
+    }
+    val batches = plans.flatMap(p => p.collectFirst {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => (p, e)
+    })
+    assert(batches.nonEmpty, "no micro-batch plan carries the stream repartition")
+    batches.foreach { case (p, exchange) =>
+      val grams = p.collect {
+        case n if n.expressions.exists(_.find(_.isInstanceOf[Sequence]).isDefined) => n
+      }
+      assert(grams.size == 1,
+        s"gram expression evaluated ${grams.size} times:\n$p")
+      assert(grams.head.find(_ eq exchange).isDefined,
+        s"gram expression is not above the repartition's exchange:\n$p")
+    }
+  }
 }

@@ -1,6 +1,8 @@
 package graft.api
 
 import graft.SparkSpec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
@@ -336,5 +338,153 @@ class StreamEnvSpec extends SparkSpec {
     val r = a.connect(b).ds.collect()
     assert(r.count(_.isLeft) == 2 && r.count(_.isRight) == 1)
     assert(r.filter(_.isRight).map(_.fold(_.toString)(identity)).toSeq == Seq("x"))
+  }
+
+  // ---- StreamRun: the end-of-input guard ----------------------------
+
+  /** Spark jobs started while `body` runs. A marker job after `body`
+    * flushes the listener queue: events arrive in posting order, so
+    * once the marker is seen every earlier job has been counted. */
+  private def jobsRunBy(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val markers = new java.util.concurrent.atomic.AtomicInteger
+    val sc = spark.sparkContext
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.job.description") == "graft-marker")
+          markers.incrementAndGet()
+        else jobs.incrementAndGet()
+    }
+    def flush(n: Int): Unit = {
+      sc.setJobDescription("graft-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (markers.get < n && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markers.get == n, "listener queue did not drain")
+    }
+    sc.addSparkListener(listener)
+    try {
+      flush(1)
+      jobs.set(0)
+      body
+      flush(2)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Messages of `e` and its causes — a guard that fires inside a
+    * task surfaces wrapped in the stream's and the job's exceptions. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+
+  test("StreamRun fails loudly when a pushed-down filter drops the end-of-input row") {
+    implicit val sc = spark.sqlContext
+    def windows(name: String, dropEnd: Boolean) = {
+      val input = MemoryStream[(Timestamp, Long)]
+      input.addData((ts(1), 1L), (ts(20), 2L))
+      val run = StreamRun(spark, name)
+      val sealedIn = run.endOfInput(input.toDF().toDF("ts", "k"), "ts", "k" -> lit(-1L))
+        .withWatermark("ts", "0 seconds")
+      // k >= 0 does not touch the event time, so Catalyst pushes it
+      // below the watermark node, where it removes the end-of-input row
+      (run, (if (dropEnd) sealedIn.filter(col("k") >= 0) else sealedIn)
+        .groupBy(window(col("ts"), "15 minutes")).agg(count(lit(1)).as("n"))
+        .select(col("window.start").as("w"), col("n")))
+    }
+    // control: the end-of-input row seals BOTH windows, its own never
+    val (okRun, ok) = windows("graft_test_eoi_kept", dropEnd = false)
+    val rows = okRun.toMemory(ok).df.as[(Timestamp, Long)].collect().toSet
+    assert(rows == Set((ts(0), 1L), (ts(15), 1L)))
+    // dropped: the watermark stops at 10:20 and the 10:15 window would
+    // be missing without a word — the guard names the run instead
+    val (badRun, bad) = windows("graft_test_eoi_dropped", dropEnd = true)
+    val e = intercept[IllegalStateException](badRun.toMemory(bad))
+    assert(e.getMessage.contains("graft_test_eoi_dropped"), e.getMessage)
+    assert(e.getMessage.contains("dropped the end-of-input row"), e.getMessage)
+  }
+
+  test("StreamRun fails loudly on a real row at or past end-of-input") {
+    implicit val sc = spark.sqlContext
+    val end = StreamRun.EndOfInput
+    def ids(name: String, last: Long) = {
+      val input = MemoryStream[(Long, String)]
+      input.addData((1L, "a"), (last, "b"))
+      val run = StreamRun(spark, name)
+      run.toMemory(run.idClock(input.toDF().toDF("doc_id", "text"), "doc_id")
+        .groupBy(window(col("ts"), "1 second"), col("doc_id")).count()
+        .select(col("doc_id"))).df.as[Long].collect().toSet
+    }
+    // the last id before end-of-input still seals (ts = end s, the
+    // end-of-input row's ts = end + 1 s)
+    assert(ids("graft_test_eoi_last_ok", end - 1) == Set(1L, end - 1))
+    // every id at or past end-of-input is rejected — the same inputs a
+    // max(id) pre-scan rejects, with no scan of its own
+    Seq(end, end + 1, Long.MaxValue / 2).zipWithIndex.foreach { case (id, i) =>
+      val e = intercept[Exception](ids(s"graft_test_eoi_real_$i", id))
+      assert(messages(e).contains(s"stream run 'graft_test_eoi_real_$i': " +
+        "a real row has doc_id at or past end-of-input"), messages(e))
+    }
+    // the event-time clock: a real event stamped at end-of-input
+    val ev = MemoryStream[(Timestamp, Long)]
+    ev.addData((ts(1), 1L), (new Timestamp(end * 1000L), 2L))
+    val run = StreamRun(spark, "graft_test_eoi_real_event")
+    val e = intercept[Exception](run.toMemory(
+      run.endOfInput(ev.toDF().toDF("ts", "k"), "ts").withWatermark("ts", "0 seconds")
+        .groupBy(window(col("ts"), "15 minutes")).count()))
+    assert(messages(e).contains("a real row has ts at or past end-of-input"), messages(e))
+  }
+
+  test("StreamRun guards a q126-shaped event stream without adding a Spark job") {
+    import graft.cep.CEP
+    implicit val sc = spark.sqlContext
+    type Ev = (Long, Timestamp, Long, String)
+    val events = Seq[Ev]((1L, ts(0), 7L, "view"), (2L, ts(10), 7L, "purchase"),
+      (3L, ts(20), 8L, "view"), (4L, ts(30), 9L, "view"),
+      (5L, ts(50), 9L, "purchase"))
+    // views with no purchase inside 1h: q126's timed-out side
+    def timeouts(ev: DataFrame): DataFrame = {
+      val p = CEP.Pattern.begin[Ev]("view").where(_._4 == "view")
+        .followedBy("purchase").where(_._4 == "purchase")
+        .within(scala.concurrent.duration.Duration(1, "hour"))
+      implicit val bufEnc: org.apache.spark.sql.Encoder[Seq[Ev]] =
+        org.apache.spark.sql.Encoders.kryo[Seq[Ev]]
+      CEP.patternStreamWithTimeouts(ev.withWatermark("ts", "0 seconds").as[(Long, Timestamp, Long, String)], p,
+        (e: Ev) => e._3, (e: Ev) => e._2.getTime, (e: Ev) => e._1) {
+        (uid, m) => (uid, m.stages("view").head._1, false)
+      } { (uid, partial) => (uid, partial.stages("view").head._1, true) }
+        .toDF("user_id", "view_id", "timed_out")
+    }
+    def input() = {
+      val in = MemoryStream[(Long, Timestamp, Long, String)]
+      in.addData(events)
+      in.toDF().toDF("event_id", "ts", "user_id", "event_type")
+    }
+    // before: a bare far-future row unioned in, no guard
+    var bare: Set[(Long, Long)] = Set.empty
+    val bareJobs = jobsRunBy {
+      val end = MemoryStream[(Long, Timestamp, Long, String)]
+      end.addData((-1L, new Timestamp(StreamRun.EndOfInput * 1000L), -1L, "noise"))
+      val in = input()
+      val q = timeouts(in.union(end.toDF().toDF(in.columns: _*)))
+        .writeStream.format("memory").queryName("graft_test_eoi_bare").start()
+      try q.processAllAvailable() finally q.stop()
+      bare = spark.table("graft_test_eoi_bare").filter(col("timed_out") && col("user_id") >= 0)
+        .select(col("user_id"), col("view_id")).as[(Long, Long)].collect().toSet
+    }
+    // after: the harness row with both guards
+    var guarded: Set[(Long, Long)] = Set.empty
+    val guardedJobs = jobsRunBy {
+      val run = StreamRun(spark, "graft_test_eoi_guarded")
+      guarded = run.toMemory(timeouts(run.endOfInput(input(), "ts",
+          "event_id" -> lit(-1L), "user_id" -> lit(-1L), "event_type" -> lit("noise"))))
+        .df.filter(col("timed_out") && col("user_id") >= 0)
+        .select(col("user_id"), col("view_id")).as[(Long, Long)].collect().toSet
+    }
+    assert(bare == Set((8L, 3L)) && guarded == bare)
+    assert(bareJobs > 0, "no jobs counted")
+    assert(guardedJobs == bareJobs,
+      s"the guard changed the run's Spark jobs: $bareJobs -> $guardedJobs")
   }
 }

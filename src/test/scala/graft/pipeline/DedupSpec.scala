@@ -53,13 +53,13 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text").coalesce(1)
       .write.parquet(dir + "/documents.parquet")
 
-    val global = StreamingDedup.minhashDedup(spark, dir)
+    val global = StreamingDedup.minhashDedup(spark, dir).df
       .as[(Long, Long)].collect().toSet
     assert(global == Set((200L, 1L), (211L, 210L)))
 
     // 60s horizon: doc 1 has aged out when 200 arrives; the adjacent
     // pair still dedups
-    val windowed = StreamingDedup.minhashDedup(spark, dir, horizonSeconds = Some(60L))
+    val windowed = StreamingDedup.minhashDedup(spark, dir, horizonSeconds = Some(60L)).df
       .as[(Long, Long)].collect().toSet
     assert(windowed == Set((211L, 210L)))
   }
@@ -74,20 +74,22 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "label", "embedding").coalesce(1)
       .write.parquet(dir + "/embeddings.parquet")
 
-    val global = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)
-      .as[(Long, Long)].collect().toSet
+    val globalRun = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)
+    val global = globalRun.df.as[(Long, Long)].collect().toSet
     assert(global == Set((300L, 1L), (311L, 310L)))
     // no horizon → no eviction: all label blocks stay live
-    assert(StreamingDedup.lastStateRows >= 2,
-      s"expected live blocks without a horizon, saw ${StreamingDedup.lastStateRows}")
+    val liveBlocks = globalRun.stateRows.head
+    assert(liveBlocks >= 2, s"expected live blocks without a horizon, saw $liveBlocks")
 
-    val windowed = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9,
-      horizonSeconds = Some(60L)).as[(Long, Long)].collect().toSet
+    val windowedRun = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9,
+      horizonSeconds = Some(60L))
+    val windowed = windowedRun.df.as[(Long, Long)].collect().toSet
     assert(windowed == Set((311L, 310L)))
     // horizon eviction removes quiescent blocks once the watermark
-    // passes their members; only the sentinel's pending block survives
-    assert(StreamingDedup.lastStateRows <= 1,
-      s"horizon left ${StreamingDedup.lastStateRows} state rows")
+    // passes their members; only the end-of-input row's pending block
+    // survives
+    val leftBlocks = windowedRun.stateRows.head
+    assert(leftBlocks <= 1, s"horizon left $leftBlocks state rows")
   }
 
   test("sign-bucket blocking finds cross-label near-dups label blocking misses") {
@@ -99,12 +101,12 @@ class DedupSpec extends SparkSpec {
       .toDF("vec_id", "label", "embedding").coalesce(1)
       .write.parquet(dir + "/embeddings.parquet")
 
-    val byLabel = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9)
+    val byLabel = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9).df
       .as[(Long, Long)].collect().toSet
     assert(byLabel.isEmpty)
 
     val bySign = StreamingDedup.embeddingNearDup(spark, dir, threshold = 0.9,
-      signTables = 4, signBits = 2).as[(Long, Long)].collect().toSet
+      signTables = 4, signBits = 2).df.as[(Long, Long)].collect().toSet
     assert(bySign == Set((2L, 1L)))
   }
 

@@ -82,15 +82,16 @@ class TextAnalysisSpec extends SparkSpec {
 
   test("q158 append-mode ingest decontamination keeps bounded state") {
     import graft.Registry
-    val (streamDf, stateRows) = TextAnalysis.decontamStream(spark, sf)
+    val run = TextAnalysis.decontamStream(spark, sf)
     val q155 = Registry.all.find(_.name == "q155_decontamination").get
-    val a = streamDf.collect().map(_.toSeq).toSeq
+    val a = run.df.collect().map(_.toSeq).toSeq
     val b = q155.fn(spark, sf).collect().map(_.toSeq).toSeq
     assert(a == b, "streaming decontamination must equal the batch result")
     // sealed (window, doc) groups are evicted as the watermark passes;
-    // only the never-sealing sentinel's group may remain live. A
-    // complete-mode running aggregate would hold one row per doc.
-    assert(stateRows >= 0, "no streaming progress captured")
+    // only the never-sealing end-of-input row's group may remain live.
+    // A complete-mode running aggregate would hold one row per doc.
+    assert(run.stateRows.nonEmpty, "no streaming progress captured")
+    val stateRows = run.stateRows.head
     assert(stateRows <= 1,
       s"append windowed agg left $stateRows state rows " +
         s"for ${b.size} docs — sealed groups are not being evicted")
@@ -159,7 +160,8 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("q193 sealed-window trending keeps bounded state and a windows×3 sink") {
-    val (out, stateRows) = TextAnalysis.trendingStream(spark, sf)
+    val run = TextAnalysis.trendingStream(spark, sf)
+    val (out, stateRows) = (run.df, run.stateRows)
     val rows = out.collect()
     // the sink table holds ONE row per sealed window with a ≤3-element
     // top-k array — the windows × 3 bound (the r11 complete-mode form
@@ -171,8 +173,8 @@ class TextAnalysisSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, size, max => smax}
     assert(sink.agg(smax(size(col("topk")))).head.getInt(0) <= 3)
     // chained append-mode aggs evict sealed groups: stage-1 live state
-    // is the sentinel's never-sealing (window, word) group only, and
-    // stage-2 holds at most the sentinel-era remnants — a complete-mode
+    // is the end-of-input row's never-sealing (window, word) group
+    // only, and stage-2 holds at most its remnants — a complete-mode
     // form would hold the full windows × vocab running state
     assert(stateRows.nonEmpty, "no streaming progress captured")
     assert(stateRows.sum <= 2,
