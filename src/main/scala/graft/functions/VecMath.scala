@@ -1,11 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType,
+  IntegerType, LongType}
 
 /** Fused vector arithmetic for the embedding family (ANN search,
   * near-dup scoring, k-means assignment). The composite
@@ -65,25 +68,49 @@ object VecMath {
     acc
   }
 
-  def nearestIndex(a: ArrayData, cents: Array[Array[Double]], aF: Boolean): Int = {
+  /** Spark's `round(d, 6)` on a double, as RoundBase evaluates it:
+    * HALF_UP on `BigDecimal.valueOf(d)` (the shortest decimal that
+    * reads back as d), NaN and ±∞ passed through. */
+  def round6(d: Double): Double =
+    if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
+    else java.math.BigDecimal.valueOf(d)
+      .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+
+  /** Position in `cents` of the nearest candidate to `a`: the minimum
+    * by (round6(sqDist), id) under Spark's double ordering, so equal
+    * rounded distances go to the lowest id whatever the scan order.
+    * Candidates are every position (`cands` null) or the positions
+    * listed in `cands`; none gives −1. No early exit: a partial sum
+    * can still round to the best's value and win the tie on id. */
+  def argminIndex(a: ArrayData, aF: Boolean, ids: Array[Long],
+      cents: Array[Array[Double]], cands: ArrayData): Int = {
     val n = a.numElements()
-    var best = 0
-    var bd = Double.MaxValue
+    val x = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i))
+        throw new IllegalArgumentException(s"vec_argmin: null element at $i")
+      x(i) = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
+      i += 1
+    }
+    val nc = if (cands == null) cents.length else cands.numElements()
+    var best = -1
+    var bd = 0.0
     var c = 0
-    while (c < cents.length) {
-      val cv = cents(c)
+    while (c < nc) {
+      if (cands != null && cands.isNullAt(c))
+        throw new IllegalArgumentException(s"vec_argmin: null candidate at $c")
+      val p = if (cands == null) c else cands.getInt(c)
+      val cv = cents(p)
       if (cv.length != n)
         throw new IllegalArgumentException(
-          s"vec_nearest_index: length mismatch $n vs ${cv.length}")
+          s"vec_argmin: length mismatch $n vs ${cv.length}")
       var acc = 0.0
-      var i = 0
-      while (i < n && acc < bd) { // early exit once past the best
-        val x = if (aF) a.getFloat(i).toDouble else a.getDouble(i)
-        val d = x - cv(i)
-        acc += d * d
-        i += 1
-      }
-      if (acc < bd) { bd = acc; best = c } // strict < → ties to lowest index
+      i = 0
+      while (i < n) { val d = x(i) - cv(i); acc += d * d; i += 1 }
+      val r = round6(acc)
+      val o = if (best < 0) -1 else SQLOrderingUtil.compareDoubles(r, bd)
+      if (o < 0 || (o == 0 && ids(p) < ids(best))) { best = p; bd = r }
       c += 1
     }
     best
@@ -133,13 +160,22 @@ object VecMath {
   def vec_dot(a: Column, b: Column): Column =
     Bridge.column(VecDot(Bridge.expression(a), Bridge.expression(b)))
 
-  /** argmin over a DRIVER-SIDE centroid table: index of the nearest
-    * centroid by squared L2, ties to the lowest index — a pure map
-    * (zero shuffle) that routes each row against a literal centroid
-    * array shipped with the plan. The nearest-centroid primitive of
-    * two-level assignment and IVF routing. */
-  def vec_nearest_index(a: Column, centroids: Seq[Seq[Double]]): Column =
-    Bridge.column(VecNearestIndex(Bridge.expression(a), centroids))
+  /** Id of the nearest model vector: the minimum by (round(sq_dist, 6),
+    * id), ties to the lowest id — the one nearest-centroid primitive of
+    * k-means, IVF routing and PQ coding. A pure per-row map against a
+    * driver-side model (no shuffle, legal in a streaming projection);
+    * bit-identical to the per-candidate
+    * `array_min(array(struct(round(vec_sq_dist(a, c), 6), id)…)).id`
+    * it replaced. NULL for a NULL vector or an empty model. */
+  def vec_argmin(a: Column, model: Seq[(Long, Seq[Double])]): Column =
+    Bridge.column(VecArgmin(Seq(Bridge.expression(a)), model))
+
+  /** [[vec_argmin]] over a per-row candidate subset: `cands` is an
+    * array<int> of positions in `model` (NULL when it is empty). */
+  def vec_argmin(a: Column, model: Seq[(Long, Seq[Double])],
+      cands: Column): Column =
+    Bridge.column(VecArgmin(
+      Seq(Bridge.expression(a), Bridge.expression(cands)), model))
 
   /** Top-p variant (multi-probe IVF routing): array of the p nearest
     * centroid indices, ascending by (dist, index). */
@@ -202,35 +238,62 @@ case class VecDot(left: Expression, right: Expression)
   override def prettyName: String = "vec_dot"
 }
 
-case class VecNearestIndex(child: Expression, centroids: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+/** `vec_argmin(v, model)` / `vec_argmin(v, model, cands)`: children
+  * are the vector and, in the subset form, the candidate positions. */
+case class VecArgmin(children: Seq[Expression], model: Seq[(Long, Seq[Double])])
+    extends Expression {
 
-  @transient private lazy val arr: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
+  @transient private lazy val ids: Array[Long] = model.map(_._1).toArray
+  @transient private lazy val cents: Array[Array[Double]] =
+    model.map(_._2.toArray).toArray
   private def aFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+    children.head.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   override def checkInputDataTypes(): TypeCheckResult =
-    VecMath.checkVecInputs(prettyName, Seq(child))
+    children.lift(1).map(_.dataType) match {
+      case None | Some(ArrayType(IntegerType, _)) =>
+        VecMath.checkVecInputs(prettyName, children.take(1))
+      case Some(t) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires array<int> candidates, got ${t.catalogString}")
+    }
 
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+  override def nullable: Boolean = true
+  override def dataType: DataType = LongType
 
-  override protected def nullSafeEval(a: Any): Any =
-    VecMath.nearestIndex(a.asInstanceOf[ArrayData], arr, aFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", arr, "double[][]")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VecMath.nearestIndex($a, $ref, $aFloat);")
+  override def eval(input: InternalRow): Any = {
+    val vals = children.map(_.eval(input))
+    if (vals.contains(null)) null
+    else {
+      val p = VecMath.argminIndex(vals.head.asInstanceOf[ArrayData], aFloat,
+        ids, cents, vals.lift(1).map(_.asInstanceOf[ArrayData]).orNull)
+      if (p < 0) null else ids(p)
+    }
   }
 
-  override protected def withNewChildInternal(newChild: Expression): VecNearestIndex =
-    copy(child = newChild)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val idsRef = ctx.addReferenceObj("ids", ids, "long[]")
+    val centsRef = ctx.addReferenceObj("centroids", cents, "double[][]")
+    val evs = children.map(_.genCode(ctx))
+    val p = ctx.freshName("p")
+    val cands = if (evs.size == 2) evs(1).value.toString else "null"
+    ev.copy(code = code"""
+      ${evs.map(_.code).reduce(_ + _)}
+      boolean ${ev.isNull} = true;
+      long ${ev.value} = -1L;
+      if (!(${evs.map(_.isNull.toString).mkString(" || ")})) {
+        int $p = graft.functions.VecMath.argminIndex(${evs.head.value}, $aFloat,
+          $idsRef, $centsRef, $cands);
+        if ($p >= 0) { ${ev.isNull} = false; ${ev.value} = $idsRef[$p]; }
+      }""")
+  }
 
-  override def prettyName: String = "vec_nearest_index"
-  // keep centroid payload out of plan renders
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): VecArgmin = copy(children = newChildren)
+
+  override def prettyName: String = "vec_argmin"
+  // keep the model payload out of plan renders
   override def toString: String =
-    s"vec_nearest_index($child, k=${centroids.length})"
+    s"vec_argmin(${children.mkString(", ")}, k=${model.length})"
 }
 
 case class VecNearestIndices(child: Expression, centroids: Seq[Seq[Double]],

@@ -49,10 +49,10 @@ import org.apache.spark.sql.functions._
   * (q135's deterministic Lloyd's conventions: 6-dp rounding, ties to
   * the lowest id — AnnIngestSpec pins stream ≡ batch on the same
   * slice; q238's DuckDB oracle replays fit AND delta assignment):
-  * the per-row expression computes the same round(vec_sq_dist, 6)
-  * argmin the relational assignFlat aggregate does, just against
-  * literal arrays instead of a broadcast join — which is what makes
-  * it legal inside a streaming projection.
+  * the per-row expression is the same VecMath.vec_argmin the batch
+  * assignFlat projection runs — a stateless map against the
+  * driver-side model, which is what makes it legal inside a
+  * streaming projection.
   *
   * Reference behavior: linweijiang/Flink-1.8-SourceCode has no vector
   * index; this extends the LLM-pipeline family (SURVEY §2 LLM-ops)
@@ -77,25 +77,10 @@ object AnnIndex {
       k: Int = 8, updates: Int = 2, m: Int = 4, ks: Int = 4,
       subDim: Int = 16, fitLimit: Option[Long] = None): Unit = {
     val fitOn = fitLimit.fold(corpus)(l => corpus.filter(col("vec_id") < l))
-    // r18 fix (r17 ADVICE, medium): under the default geometry the
-    // fits return driver-local LITERAL frames, but on the
-    // over-ceiling / degenerate-fallback paths they are lazy
-    // aggregate plans — the write below would execute the fit once
-    // and collectModel would RE-execute it, and round(avg, 6) over
-    // shuffled doubles is not guaranteed bit-stable across
-    // executions, so postings could be assigned with a model
-    // differing at rounding boundaries from the persisted one (it
-    // also ran the fit twice). One localCheckpoint pins ONE execution
-    // to feed both consumers — model/postings consistency by
-    // construction, as the pre-r17 read-back gave.
-    def pinned(df: DataFrame): DataFrame =
-      df.queryExecution.analyzed match {
-        case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
-        case _ => df.localCheckpoint()
-      }
-    val cent = pinned(Similarity.kmeansCentroids(fitOn, k, updates))
-    val cb1 = pinned(
-      Similarity.pqModelP(Similarity.edOf(fitOn), m, ks, subDim)._2)
+    // both fits return driver-local LITERAL frames at any geometry, so
+    // the writes below and collectModel read one fit, never a re-run
+    val cent = Similarity.kmeansCentroids(fitOn, k, updates)
+    val cb1 = Similarity.pqModelP(Similarity.edOf(fitOn), m, ks, subDim)._2
     cent.write.mode("overwrite").parquet(s"$path/model/centroids")
     cb1.write.mode("overwrite").parquet(s"$path/model/codebooks")
     // r17 OPT: the postings assigner compiles from the just-fitted
@@ -144,14 +129,14 @@ object AnnIndex {
 
   /** Build the PER-ROW assignment function from the PERSISTED model:
     * reads the (broadcast-class) centroid/codebook tables back and
-    * compiles them into literal-array expressions — cluster = argmin
-    * over the k centroid distances, c_j = argmin over the ks codeword
-    * distances per subspace. The GEOMETRY comes from the model files
-    * themselves (k = centroid rows, m = distinct j, subDim = codeword
-    * width), never from constants. Stateless, aggregation-free,
-    * usable in a batch projection or a streaming one (doubles
-    * round-trip parquet bit-exactly, so a read-back model assigns
-    * identically to the in-memory fit). */
+    * compiles them into per-row vec_argmin expressions — cluster =
+    * argmin over the k centroid distances, c_j = argmin over the ks
+    * codeword distances per subspace. The GEOMETRY comes from the
+    * model files themselves (k = centroid rows, m = distinct j,
+    * subDim = codeword width), never from constants. Stateless,
+    * aggregation-free, usable in a batch projection or a streaming
+    * one (doubles round-trip parquet bit-exactly, so a read-back
+    * model assigns identically to the in-memory fit). */
   def assigner(s: SparkSession, path: String): DataFrame => DataFrame =
     assignerFrom(readModel(s, path))
 
@@ -163,23 +148,20 @@ object AnnIndex {
     require(cbArr.keySet == (0 until m).toSet,
       s"codebook subspaces not contiguous: ${cbArr.keySet}")
     val subDims = (0 until m).map(j => cbArr(j).head._2.length)
-    def argmin(cands: Seq[(Long, Seq[Double])], v: Column, out: String): Column =
-      array_min(array(cands.map { case (id, cv) =>
-        struct(round(VecMath.vec_sq_dist(v, typedLit(cv)), 6).as("dist"),
-          lit(id).as("id"))
-      }: _*)).getField("id").cast("int").as(out)
+    def argmin(model: Array[(Long, Seq[Double])], v: Column, out: String): Column =
+      VecMath.vec_argmin(v, model.toSeq).cast("int").as(out)
     df => {
       val withEv = df.withColumn("__ev",
         expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
       var off = 0
       val codeCols = (0 until m).map { j =>
-        val c = argmin(cbArr(j).toSeq,
+        val c = argmin(cbArr(j),
           slice(col("__ev"), off + 1, subDims(j)), s"c$j")
         off += subDims(j)
         c
       }
       val cols = col("vec_id") +:
-        argmin(centArr.toSeq, col("__ev"), "cluster") +: codeCols
+        argmin(centArr, col("__ev"), "cluster") +: codeCols
       withEv.select(cols: _*)
     }
   }
@@ -373,18 +355,15 @@ object AnnIndex {
       .limit(2).collect().map(_.getLong(0))
     require(initIds.length == 2,
       s"cell $cell has ${initIds.length} member(s) — nothing to split")
-    // r17 OPT (guide §2.4, the Similarity.argminLit device): the
-    // within-cell 2-means assigns per row against the two collected
-    // child centroids — a projection — instead of the former
-    // crossJoin + groupBy(vec_id) exchange per iteration plus the
-    // assignment-back-to-members join inside centify. Same
-    // round(vec_sq_dist, 6) + lexicographic (dist, child) min, so the
-    // assignment (and every downstream row) is output-identical.
+    // r17 OPT (guide §2.4): the within-cell 2-means assigns per row
+    // with vec_argmin against the two collected child centroids — a
+    // projection — instead of the former crossJoin + groupBy(vec_id)
+    // exchange per iteration plus the assignment-back-to-members join
+    // inside centify. Same round(vec_sq_dist, 6) + (dist, child) min,
+    // so the assignment (and every downstream row) is output-identical.
     def argmin2(cc: Array[(Int, Seq[Double])]): Column =
-      array_min(array(cc.map { case (child, ccv) =>
-        struct(round(VecMath.vec_sq_dist(col("ev"), typedLit(ccv)), 6)
-          .as("dist"), lit(child).as("id"))
-      }.toIndexedSeq: _*)).getField("id")
+      VecMath.vec_argmin(col("ev"),
+        cc.toSeq.map { case (child, ccv) => (child.toLong, ccv) }).cast("int")
     def centify(assigned: DataFrame): Array[(Int, Seq[Double])] =
       assigned
         .select(col("child"), posexplode(col("ev")))

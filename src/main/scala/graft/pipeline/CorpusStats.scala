@@ -302,13 +302,14 @@ object CorpusStats extends QueryModule {
     // equi self-join whose fan-out per gram is ≤ (#sources choose
     // 2) — bounded by the source count, NOT the corpus, so the join
     // is linear in gram volume at any scale. The full matrix frame
-    // (sizes × sizes, tiny) broadcasts; pairs sharing nothing emit
-    // inter = 0. AUTO-ROUTED at scale (r14): the r13 1000× probe
-    // measured this exact path 8–14×/decade superlinear (the gram
-    // self-join's spill), so past `overlapRouteChars` total corpus
-    // chars sourceOverlap WARN-logs and serves the q206 MinHash
-    // estimate in this same schema — see sourceOverlapRouted. Every
-    // sweep SF stays on the exact oracle-checked path. -----
+    // (sizes × sizes, tiny) is the preserved side of a left join, so
+    // pairs sharing nothing emit inter = 0. AUTO-ROUTED at scale
+    // (r14): the r13 1000× probe measured this exact path
+    // 8–14×/decade superlinear (the gram self-join's spill), so past
+    // `overlapRouteChars` total corpus chars sourceOverlap WARN-logs
+    // and serves the q206 MinHash estimate in this same schema — see
+    // sourceOverlapRouted. Every sweep SF stays on the exact
+    // oracle-checked path. -----
     q("q205_source_overlap",
       s"""WITH w AS (SELECT doc_id, source, string_split(lower(text), ' ') AS w
         |            FROM documents),
@@ -560,7 +561,7 @@ object CorpusStats extends QueryModule {
       .filter(col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(count(lit(1)).as("inter"))
-    broadcast(pr).join(iv, Seq("src_a", "src_b"), "left")
+    pr.join(iv, Seq("src_a", "src_b"), "left")
       .select(col("src_a"), col("src_b"),
         col("n_a").cast("long").as("n_a"), col("n_b").cast("long").as("n_b"),
         coalesce(col("inter"), lit(0L)).cast("long").as("inter"),
@@ -599,7 +600,7 @@ object CorpusStats extends QueryModule {
       .filter(col("src_a") < col("src_b"))
       .groupBy(col("src_a"), col("src_b"))
       .agg(sum(when(col("ma") === col("mb"), 1L).otherwise(0L)).as("agree"))
-    broadcast(pr).join(ag, Seq("src_a", "src_b"), "left")
+    pr.join(ag, Seq("src_a", "src_b"), "left")
       .withColumn("agree0", coalesce(col("agree"), lit(0L)))
       // div is marked nullable (÷0 → null); 16+agree0 ≥ 16 makes that
       // unreachable — the coalesce restores the exact path's

@@ -104,69 +104,36 @@ object Similarity extends QueryModule {
   /** The embeddings table with its vectors cast to double arrays —
     * the input shape both assignment paths consume. */
   private[pipeline] def edOf(e: DataFrame): DataFrame =
-    e.select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("ev"))
+    e.select(col("vec_id"), evCol.as("ev"))
 
-  /** Collected (cluster id, centroid) rows — the broadcast-class model
-    * table a literal per-row argmin compiles against (r17 OPT). */
-  private type CentArr = Array[(Long, Seq[Double])]
+  /** `embedding` cast to a double array, inline. */
+  private def evCol: Column = expr("transform(embedding, x -> CAST(x AS DOUBLE))")
+
+  /** Collected (cluster id, centroid) rows — the driver-side model a
+    * per-row [[VecMath.vec_argmin]] compiles against (r17 OPT). */
+  private type CentArr = Seq[(Long, Seq[Double])]
 
   private def collectCent(cent: DataFrame): CentArr =
-    cent.select(col("cluster").cast("long"), col("cv")).collect()
+    cent.select(col("cluster").cast("long"), col("cv")).collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1)
 
-  /** True when the centroid frame is a driver-local literal table
-    * (what [[kmeansCentroids]] returns under the ceiling). r18 fix
-    * (r17 ADVICE): [[assignFlat]]/[[withClusterLit]] previously
-    * collected ANY centroid frame to decide the literal-vs-aggregate
-    * route — when `cent` was the lazy over-ceiling aggregate plan
-    * that executed the whole Lloyd's fit just to learn the row count,
-    * discarded it, and re-executed the same lineage inside the
-    * aggregate fallback. A non-local frame now routes straight to the
-    * aggregate form (values identical — the AnnIngestSpec pin). */
-  private def isLocalModel(cent: DataFrame): Boolean =
-    cent.queryExecution.analyzed.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  /** r17 OPT (guide §2.4, remove shuffles outright): compile collected
-    * centroids into a PER-ROW literal argmin — the AnnIndex.assigner
-    * device, which AnnIngestSpec pins bit-identical to the aggregate
-    * argmin (same round(vec_sq_dist, 6), same lexicographic (dist, id)
-    * min, ties to the lowest id). A nearest-centroid pass becomes a
-    * projection: no crossJoin row explosion, no N-row groupBy(vec_id)
-    * exchange. */
-  private def argminLit(cents: CentArr, v: Column): Column =
-    array_min(array(cents.map { case (id, cv) =>
-      struct(round(VecMath.vec_sq_dist(v, typedLit(cv)), 6).as("dist"),
-        lit(id).as("id"))
-    }.toIndexedSeq: _*)).getField("id")
-
-  /** Ceiling on the centroid count compiled into one literal-argmin
-    * projection; larger models (the k ∝ N regime) keep the aggregate
-    * form — they route through [[assignTwoLevel]] anyway. */
-  private val maxLitCentroids = 256
-
-  /** The flat nearest-centroid pass — exact, Θ(N·k) FLOPs. r17 OPT:
-    * the centroid table (broadcast-class by construction) collects
-    * driver-side and the argmin runs as a per-row projection
-    * ([[argminLit]]); the pre-r17 corpus × broadcast(centroids)
-    * crossJoin + groupBy(vec_id) form — one full-corpus exchange per
-    * call — remains as the large-k/empty fallback and is
-    * output-identical by the AnnIngestSpec argument. */
-  private def assignFlat(ed: DataFrame, cent: DataFrame): DataFrame = {
-    if (!isLocalModel(cent)) return assignFlatAgg(ed, cent)
+  /** `df` with its nearest-centroid `cluster` (BIGINT) attached AS A
+    * PROJECTION (r17 OPT, guide §2.4): one [[VecMath.vec_argmin]] of
+    * the row vector `v` over the collected centroids — no crossJoin
+    * row explosion, no N-row groupBy(vec_id) exchange, no assignment
+    * join back on vec_id, at any k. Same round(vec_sq_dist, 6) and
+    * (dist, id) min as the oracle's replay, ties to the lowest id. An
+    * empty model keeps no row, as the aggregate form's join did. */
+  private def withCluster(df: DataFrame, cent: DataFrame,
+      v: Column = evCol): DataFrame = {
     val arr = collectCent(cent)
-    if (arr.nonEmpty && arr.length <= maxLitCentroids)
-      ed.select(col("vec_id"), argminLit(arr, col("ev")).as("cluster"))
-    else assignFlatAgg(ed, cent)
+    val out = df.withColumn("cluster", VecMath.vec_argmin(v, arr))
+    if (arr.isEmpty) out.filter(lit(false)) else out
   }
 
-  private def assignFlatAgg(ed: DataFrame, cent: DataFrame): DataFrame =
-    ed.crossJoin(broadcast(cent))
-      .withColumn("dist", round(VecMath.vec_sq_dist(col("ev"), col("cv")), 6))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist"), col("cluster"))).as("m"))
-      .select(col("vec_id"), col("m.cluster").as("cluster"))
+  /** The flat nearest-centroid pass — exact, Θ(N·k) FLOPs. */
+  private def assignFlat(ed: DataFrame, cent: DataFrame): DataFrame =
+    withCluster(ed, cent, col("ev")).select(col("vec_id"), col("cluster"))
 
   /** The Lloyd's FIT alone: (cluster, cv) after `updates` iterations.
     * Exposed separately (r10) so callers can pair the fit with either
@@ -174,45 +141,38 @@ object Similarity extends QueryModule {
     * [[assignTwoLevel]] (Θ(N·2√k), the large-k scale path).
     *
     * r17 OPT (guide §2.4): each iteration collects the current
-    * centroids (k rows — broadcast-class) and assigns per-row via
-    * [[argminLit]], feeding the posexplode directly, so one iteration
-    * is ONE bounded-key (cluster × dim, map-side-combined) aggregation
-    * pass over the corpus — the former crossJoin explosion, the N-row
-    * groupBy(vec_id) exchange AND the assignment-back-to-embeddings
-    * join (a second N-row exchange) are gone. The returned frame is a
-    * LITERAL local table (k rows), so downstream consumers (writes,
-    * broadcast joins, [[assignFlat]]'s collect) replay no fit lineage.
-    * Values are identical to the pre-r17 aggregate form: same
-    * per-member multiset into the same round(avg, 6) per (cluster,
-    * dim), same argmin contract (the AnnIngestSpec pin). */
+    * centroids (k rows — broadcast-class) and assigns per row with
+    * [[VecMath.vec_argmin]], feeding the posexplode directly, so one
+    * iteration is ONE bounded-key (cluster × dim, map-side-combined)
+    * aggregation pass over the corpus — no crossJoin explosion, no
+    * N-row groupBy(vec_id) exchange, no assignment join back to the
+    * embeddings. The returned frame is a LITERAL local table (k rows),
+    * so downstream consumers (writes, broadcast joins, [[assignFlat]]'s
+    * collect) replay no fit lineage. Same per-member multiset into the
+    * same round(avg, 6) per (cluster, dim) as the oracle's replay. */
   private[pipeline] def kmeansCentroids(e: DataFrame, k: Int, updates: Int): DataFrame = {
-    val ed = edOf(e)
-    if (k > maxLitCentroids) return kmeansCentroidsAgg(e, k, updates)
     // posexplode the cast INLINE: a pre-projected `ev` here trips
     // InferFiltersFromGenerate, which re-evaluates the transform in
     // an interpreted filter pushed below (PLANS.md r8)
     def update(assigned: DataFrame): DataFrame =
       assigned
-        .select(col("cluster"),
-          posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
+        .select(col("cluster"), posexplode(evCol))
         .groupBy(col("cluster"), col("pos"))
         .agg(round(avg(col("col")), 6).as("c"))
         .groupBy(col("cluster"))
         .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
           .as("cv"))
-    var arr = collectCent(ed.filter(col("vec_id") < k)
+    var arr = collectCent(edOf(e).filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"), col("ev").as("cv")))
     for (_ <- 1 to updates if arr.nonEmpty)
       arr = collectCent(update(e.select(
-        argminLit(arr, expr("transform(embedding, x -> CAST(x AS DOUBLE))"))
-          .as("cluster"),
-        col("embedding"))))
+        VecMath.vec_argmin(evCol, arr).as("cluster"), col("embedding"))))
     litCentroids(e.sparkSession, arr)
   }
 
   /** The collected centroid rows as a literal local DataFrame
-    * (cluster BIGINT, cv ARRAY<DOUBLE>) — the schema the aggregate
-    * form produced; doubles survive the driver round-trip bit-exactly. */
+    * (cluster BIGINT, cv ARRAY<DOUBLE>); doubles survive the driver
+    * round-trip bit-exactly. */
   private def litCentroids(s: SparkSession, arr: CentArr): DataFrame = {
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("cluster",
@@ -226,25 +186,6 @@ object Similarity extends QueryModule {
         org.apache.spark.sql.Row(c._1, c._2)): _*), schema)
   }
 
-  /** Pre-r17 lazy aggregate fit — kept verbatim for k beyond the
-    * literal-projection ceiling. */
-  private def kmeansCentroidsAgg(e: DataFrame, k: Int, updates: Int): DataFrame = {
-    val ed = edOf(e)
-    def update(assigned: DataFrame): DataFrame =
-      assigned.join(e.select(col("vec_id"), col("embedding")), "vec_id")
-        .select(col("cluster"),
-          posexplode(expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(round(avg(col("col")), 6).as("c"))
-        .groupBy(col("cluster"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)")
-          .as("cv"))
-    var cent = ed.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cluster"), col("ev").as("cv"))
-    for (_ <- 1 to updates) cent = update(assignFlatAgg(ed, cent))
-    cent
-  }
-
   private[pipeline] def kmeansClusters(e: DataFrame, k: Int, updates: Int): DataFrame =
     assignFlat(edOf(e), kmeansCentroids(e, k, updates))
 
@@ -254,23 +195,6 @@ object Similarity extends QueryModule {
     * sample" posture the kmeansCentroids scaladoc describes). */
   private[pipeline] def assignWith(e: DataFrame, cent: DataFrame): DataFrame =
     assignFlat(edOf(e), cent)
-
-  /** `e` (vec_id, embedding, …) with its nearest-centroid `cluster`
-    * attached AS A PROJECTION (r17 OPT, guide §2.4): callers that
-    * need the assignment next to the payload previously joined the
-    * (vec_id, cluster) frame back on vec_id — an N-row exchange the
-    * literal argmin makes unnecessary. Output-identical to
-    * assignFlat + join (the AnnIngestSpec argument); the aggregate
-    * form + join remains as the over-ceiling fallback. */
-  private def withClusterLit(e: DataFrame, cent: DataFrame): DataFrame = {
-    if (!isLocalModel(cent))
-      return e.join(assignFlatAgg(edOf(e), cent), "vec_id")
-    val arr = collectCent(cent)
-    if (arr.nonEmpty && arr.length <= maxLitCentroids)
-      e.withColumn("cluster",
-        argminLit(arr, expr("transform(embedding, x -> CAST(x AS DOUBLE))")))
-    else e.join(assignFlatAgg(edOf(e), cent), "vec_id")
-  }
 
   /** Two-level nearest-centroid assignment — the escape hatch for the
     * flat pass's Θ(N·k) FLOP cost when k itself scales with the
@@ -282,8 +206,8 @@ object Similarity extends QueryModule {
     * ships to every task); each vector routes to its nearest super
     * (N·superK) and then scans only that super's member centroids
     * (N·k/superK on average) — Θ(N·2√k) at superK = √k. Both stages
-    * stay corpus-map-over-broadcast: the corpus never shuffles, the
-    * argmins are map-side-combinable aggregates.
+    * are per-row projections over the driver-side model: the corpus
+    * never shuffles.
     *
     * APPROXIMATE at the boundary: a vector whose true nearest
     * centroid sits in a non-probed super-cluster mis-routes.
@@ -294,20 +218,29 @@ object Similarity extends QueryModule {
     * TwoLevelAssignSpec pins nProbe=1 exactness on separated data,
     * monotonicity + the nProbe=superK equality on the real table.
     * Same 6-dp/lowest-id determinism contract as the flat pass, so
-    * results are reproducible under any partitioning. */
+    * results are reproducible under any partitioning.
+    *
+    * ONE OUTPUT ROW PER INPUT ROW: `vecs` must have unique vec_ids.
+    * Both stages are per-row projections, so duplicated vec_ids are
+    * not collapsed — each copy is assigned and kept. A vector whose
+    * probed supers are all memberless has no candidate and is
+    * dropped. */
   private[graft] def assignTwoLevel(s: SparkSession, vecs: DataFrame,
       cent: DataFrame, superK: Int, iters: Int = 2, nProbe: Int = 1): DataFrame =
-    assignTwoLevelAll(s, vecs, cent, superK, iters, nProbe)
+    withClusterTwoLevel(s, vecs, cent, superK, iters, nProbe)
       .select(col("vec_id"), col("cluster"))
 
-  private def assignTwoLevelAll(s: SparkSession, vecs: DataFrame,
-      cent: DataFrame, superK: Int, iters: Int, nProbe: Int): DataFrame = {
-    val centArr = cent.select(col("cluster").cast("long"), col("cv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    require(centArr.nonEmpty && superK >= 1, "need centroids and superK >= 1")
-    val dim = centArr.head._2.length
+  /** [[assignTwoLevel]] keeping the input columns: `cluster` attaches
+    * to the vector row as a projection, so large-k callers skip the
+    * assignment join-back on vec_id entirely (r18, verdict item 8).
+    * Same one-row-per-input-row contract: vec_ids must be unique. */
+  private[pipeline] def withClusterTwoLevel(s: SparkSession,
+      vecs: DataFrame, cent: DataFrame, superK: Int, iters: Int = 2,
+      nProbe: Int = 1): DataFrame = {
+    val model = collectCent(cent)
+    require(model.nonEmpty && superK >= 1, "need centroids and superK >= 1")
+    val cvs = model.map(_._2.toArray)
+    val dim = cvs.head.length
     def sq(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < dim) { val d = a(i) - b(i); acc += d * d; i += 1 }
@@ -320,58 +253,36 @@ object Similarity extends QueryModule {
       }
       best // ties to lowest super id via strict <
     }
-    var sup: IndexedSeq[Array[Double]] =
-      centArr.take(superK).map(_._2).toIndexedSeq
+    var sup: IndexedSeq[Array[Double]] = cvs.take(superK).toIndexedSeq
     for (_ <- 1 to iters) {
-      val byS = centArr.groupBy(c => nearest(c._2, sup))
+      val byS = cvs.groupBy(nearest(_, sup))
       sup = (0 until sup.length).map { sId =>
         byS.get(sId).map { ms =>
           val m = new Array[Double](dim)
-          ms.foreach(c => (0 until dim).foreach(i => m(i) += c._2(i)))
+          ms.foreach(c => (0 until dim).foreach(i => m(i) += c(i)))
           m.map(_ / ms.length)
         }.getOrElse(sup(sId))
       }
     }
     // r18 OPT (verdict item 8 — the large-k join-back): stage 2 is a
-    // PER-ROW PROJECTION, like stage 1. The super → member-(cluster,
-    // centroid)-list map rides as a literal (it is the same
-    // driver-collected model stage 1 already ships), each row flattens
-    // its nProbe probed supers' member lists and takes the same
-    // lexicographic (round(dist, 6), cluster) min the former
-    // member-join + per-vector aggregate computed — so the pre-r18
-    // N-row argmin exchange is gone, callers can keep the cluster on
-    // the vector row without an assignment join-back on vec_id, and
-    // results are identical (supers partition the centroids, so the
-    // candidate set per row is unchanged; TwoLevelAssignSpec pins
-    // exactness/monotonicity/degeneracy on the same fixtures). A
-    // vector whose probed supers are ALL memberless gets a NULL min
-    // and is dropped — exactly the rows the former inner join
-    // dropped.
-    val members: Map[Int, Seq[(Long, Seq[Double])]] =
-      (0 until sup.length).map { sId =>
-        sId -> centArr.toSeq.collect {
-          case (c, v) if nearest(v, sup) == sId => (c, v.toSeq)
-        }
-      }.toMap
-    val memberLit = typedlit(members)
+    // PER-ROW PROJECTION, like stage 1. Each super maps to its
+    // members' POSITIONS in the model (an int-list literal — the
+    // centroid vectors ride the plan once, inside vec_argmin); a row
+    // flattens its nProbe probed supers' lists and takes vec_argmin
+    // over that subset. Supers partition the centroids, so the
+    // candidate set per row is the one the pre-r18 member join +
+    // per-vector aggregate scanned, with the same (round(dist, 6),
+    // cluster) min — no N-row argmin exchange, no join-back.
+    val owner = cvs.map(nearest(_, sup))
+    val members: Map[Int, Seq[Int]] = (0 until sup.length).map { sId =>
+      sId -> cvs.indices.filter(owner(_) == sId)
+    }.toMap
     val cands = flatten(transform(
-      graft.functions.VecMath.vec_nearest_indices(col("ev"),
-        sup.map(_.toSeq), nProbe),
-      sId => element_at(memberLit, sId)))
-    val clusterCol = array_min(transform(cands, m =>
-      struct(round(VecMath.vec_sq_dist(col("ev"), m.getField("_2")), 6)
-        .as("dist"), m.getField("_1").as("id")))).getField("id")
-    vecs.withColumn("cluster", clusterCol)
+      VecMath.vec_nearest_indices(col("ev"), sup.map(_.toSeq), nProbe),
+      sId => element_at(typedlit(members), sId)))
+    vecs.withColumn("cluster", VecMath.vec_argmin(col("ev"), model, cands))
       .filter(col("cluster").isNotNull)
   }
-
-  /** [[assignTwoLevel]] keeping the input columns: `cluster` attaches
-    * to the vector row as a projection, so large-k callers skip the
-    * assignment join-back on vec_id entirely (r18, verdict item 8). */
-  private[pipeline] def withClusterTwoLevel(s: SparkSession,
-      vecs: DataFrame, cent: DataFrame, superK: Int, iters: Int = 2,
-      nProbe: Int = 1): DataFrame =
-    assignTwoLevelAll(s, vecs, cent, superK, iters, nProbe)
 
   /** IVF with real k-means routing: cluster the corpus with the
     * relational Lloyd's above, then run the two-stage search — probes
@@ -388,7 +299,7 @@ object Similarity extends QueryModule {
     val e = Tables.t(s, dir, "embeddings")
     // r17 OPT: cluster attaches as a projection — the former
     // assignment-frame join back on vec_id (an N-row exchange) is gone
-    val clustered = withClusterLit(e.select(col("vec_id"), col("embedding")),
+    val clustered = withCluster(e.select(col("vec_id"), col("embedding")),
       kmeansCentroids(e, k, updates))
     val probes = clustered.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("cluster").as("q_cluster"),
@@ -472,7 +383,7 @@ object Similarity extends QueryModule {
     // r17 OPT: cluster attaches to ed as a projection; the residual
     // subtraction then needs only the broadcast centroid join — the
     // former assignment join back on vec_id (N-row exchange) is gone
-    val edc = withClusterLitEd(ed, cent)
+    val edc = withCluster(ed, cent, col("ev"))
     // r18 OPT (guide §2.4): the cluster rides the residual projection
     // and the code projection (pqModelP passThrough) — the pre-r18
     // codes ⋈ assigned join on vec_id, an (N·m)-row exchange, is gone
@@ -604,11 +515,10 @@ object Similarity extends QueryModule {
     // keeps cluster on the vector row, so the former N-row
     // assignment ⋈ embeddings join-back is gone
     val clustered = (if (sk <= 1)
-        withClusterLit(e.select(col("vec_id"), col("embedding")),
+        withCluster(e.select(col("vec_id"), col("embedding")),
           kmeansCentroids(e, k, updates))
       else withClusterTwoLevel(s,
-          e.select(col("vec_id"), col("embedding"),
-            expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("ev")),
+          e.select(col("vec_id"), col("embedding"), evCol.as("ev")),
           kmeansCentroids(e, k, updates), sk, nProbe = nProbe)
         .drop("ev"))
       .select(col("vec_id"), col("cluster"), col("embedding"),
@@ -648,7 +558,7 @@ object Similarity extends QueryModule {
       updates: Int = 2, tau: Double = 0.25): DataFrame = {
     val e = Tables.t(s, dir, "embeddings")
     // r17 OPT: projection-attached cluster (see semDedup)
-    val clustered = withClusterLit(e.select(col("vec_id"), col("embedding")),
+    val clustered = withCluster(e.select(col("vec_id"), col("embedding")),
         kmeansCentroids(e, k, updates))
       .select(col("vec_id"), col("cluster"), col("embedding"),
         normExpr("embedding").as("nrm"))
@@ -870,10 +780,9 @@ object Similarity extends QueryModule {
     *   optimized" item 1): extra `ed` columns carried through the
     *   code PROJECTION into the returned code table — q190/q194
     *   previously joined the coarse assignment back onto the codes on
-    *   vec_id, an (N·m)-row exchange the literal-argmin projection
+    *   vec_id, an (N·m)-row exchange the vec_argmin projection
     *   makes unnecessary. Values are untouched (the fit never reads
-    *   them); the aggregate fallback attaches them with the pre-r18
-    *   vec_id join instead (no registered geometry routes there). */
+    *   them). */
   private[pipeline] def pqModelP(ed: DataFrame, m: Int, ks: Int,
       subDim: Int, passThrough: Seq[String] = Nil)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -882,21 +791,19 @@ object Similarity extends QueryModule {
         (0 until m).map(j => struct(lit(j).as("j"),
           slice(col("ev"), j * subDim + 1, subDim).as("sv"))): _*)).as("p"))
       .select(col("vec_id"), col("p.j").as("j"), col("p.sv").as("sv"))
-    // r17 OPT (guide §2.4, the [[argminLit]] device): both codeword
-    // assignment passes compile the (m·ks)-row codebook into per-row
-    // literal argmins. The pre-r17 form paid, per pass, an
+    // r17 OPT (guide §2.4): both codeword assignment passes are
+    // per-row [[VecMath.vec_argmin]] projections over the collected
+    // (m·ks)-row codebook. The pre-r17 form paid, per pass, an
     // svs × broadcast(cb) explosion plus an (N·m)-row
     // groupBy(vec_id, j) exchange, and the codebook update joined the
     // codes BACK to svs on (vec_id, j) — a further (N·m)-row exchange;
-    // all three are projections now, and the only remaining exchange
-    // of the fit is the bounded-key (j, code, si — map-side-combined)
-    // codeword-mean aggregation. Output-identical: same
-    // round(vec_sq_dist, 6) per candidate, same lexicographic
-    // (dist, code) min (the AnnIngestSpec pin), same member multiset
-    // into the same round(avg, 6).
+    // the only remaining exchange of the fit is the bounded-key
+    // (j, code, si — map-side-combined) codeword-mean aggregation.
+    // Same round(vec_sq_dist, 6) per candidate, same (dist, code) min,
+    // same member multiset into the same round(avg, 6).
     def collectCb(cb: DataFrame): Map[Int, CentArr] =
       cb.select(col("j").cast("int"), col("code").cast("long"), col("cv"))
-        .collect()
+        .collect().toSeq
         .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Double](2)))
         .groupBy(_._1)
         .map { case (j, rows) =>
@@ -904,39 +811,30 @@ object Similarity extends QueryModule {
         }
     val ptCols = passThrough.map(col(_))
     // per-row (vec_id, [passThrough...,] j, code, sv) against a
-    // collected codebook
+    // collected codebook (code NULL where it has no codeword)
     def coded(cb: Map[Int, CentArr]): DataFrame =
       ed.select((col("vec_id") +: ptCols :+
         explode(array((0 until m).map(j =>
           struct(lit(j).as("j"),
-            argminLit(cb(j), slice(col("ev"), j * subDim + 1, subDim))
-              .as("code"),
+            VecMath.vec_argmin(slice(col("ev"), j * subDim + 1, subDim),
+              cb.getOrElse(j, Nil)).as("code"),
             slice(col("ev"), j * subDim + 1, subDim).as("sv"))): _*)).as("p")): _*)
         .select((col("vec_id") +: ptCols :+ col("p.j").as("j") :+
           col("p.code").as("code") :+ col("p.sv").as("sv")): _*)
     val cb0 = collectCb(svs.filter(col("vec_id") < ks)
       .select(col("j"), col("vec_id").as("code"), col("sv").as("cv")))
-    if (cb0.size < m || ks > maxLitCentroids) {
-      // degenerate/oversized: the aggregate fallback, pass-through
-      // attached by the pre-r18 vec_id join
-      val (s0, c0, codes0) = pqModelAgg(ed, m, ks, subDim, svs)
-      return (s0, c0,
-        if (passThrough.isEmpty) codes0
-        else codes0.join(
-          ed.select((col("vec_id") +: ptCols): _*), "vec_id"))
-    }
-    val cb1 = coded(cb0)
+    // no vec_id < ks: no codeword to start from, so an empty codebook
+    // and no codes
+    val cb1Arr = if (cb0.isEmpty) cb0 else collectCb(coded(cb0)
       .select(col("j"), col("code"), posexplode(col("sv")).as(Seq("si", "x")))
       .groupBy(col("j"), col("code"), col("si"))
       .agg(round(avg(col("x")), 6).as("c"))
       .groupBy(col("j"), col("code"))
       .agg(expr("transform(array_sort(collect_list(struct(si, c))), s -> s.c)")
-        .as("cv"))
-    val cb1Arr = collectCb(cb1)
+        .as("cv")))
     // cb1 as a LITERAL local table: its two consumers (pqLookup's
     // broadcast join, AnnIndex.save's model write) replay no fit
-    // lineage; schema matches the aggregate form's (j INT, code
-    // BIGINT, cv ARRAY<DOUBLE>)
+    // lineage
     import org.apache.spark.sql.types._
     val cb1Schema = StructType(Seq(
       StructField("j", IntegerType, nullable = false),
@@ -948,32 +846,9 @@ object Similarity extends QueryModule {
         case (j, rows) => rows.map(r =>
           org.apache.spark.sql.Row(j, r._1, r._2))
       }: _*), cb1Schema)
-    (svs, cb1Lit, coded(cb1Arr)
-      .select((col("vec_id") +: ptCols :+ col("j") :+ col("code")): _*))
-  }
-
-  /** Pre-r17 aggregate PQ fit — the fallback for degenerate inits
-    * (fewer than m populated subspaces) or ks beyond the literal
-    * ceiling. */
-  private def pqModelAgg(ed: DataFrame, m: Int, ks: Int, subDim: Int,
-      svs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val cb0 = svs.filter(col("vec_id") < ks)
-      .select(col("j"), col("vec_id").as("code"), col("sv").as("cv"))
-    def assign(cb: DataFrame): DataFrame =
-      svs.join(broadcast(cb), "j")
-        .withColumn("dist", round(VecMath.vec_sq_dist(col("sv"), col("cv")), 6))
-        .groupBy(col("vec_id"), col("j"))
-        .agg(min(struct(col("dist"), col("code"))).as("mn"))
-        .select(col("vec_id"), col("j"), col("mn.code").as("code"))
-    val cb1 = assign(cb0)
-      .join(svs, Seq("vec_id", "j"))
-      .select(col("j"), col("code"), posexplode(col("sv")).as(Seq("si", "x")))
-      .groupBy(col("j"), col("code"), col("si"))
-      .agg(round(avg(col("x")), 6).as("c"))
-      .groupBy(col("j"), col("code"))
-      .agg(expr("transform(array_sort(collect_list(struct(si, c))), s -> s.c)")
-        .as("cv"))
-    (svs, cb1, assign(cb1))
+    val codes = coded(cb1Arr)
+      .select((col("vec_id") +: ptCols :+ col("j") :+ col("code")): _*)
+    (svs, cb1Lit, if (cb1Arr.isEmpty) codes.filter(lit(false)) else codes)
   }
 
   /** Per-query ADC lookup tables: (query_id, j, code, d) — m × ks
@@ -1027,15 +902,14 @@ object Similarity extends QueryModule {
   private[pipeline] def ivfPqTopK(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.t(s, dir, "embeddings")
     // r18 OPT (guide §2.4 — the r17 "Not yet optimized" item 1): the
-    // coarse cluster attaches to the embedding row as a literal-argmin
+    // coarse cluster attaches to the embedding row as a vec_argmin
     // PROJECTION and rides the code projection via passThrough; the
     // pre-r18 plan joined the (vec_id, cluster) assignment back onto
     // the (N·m)-row code table — a full-index exchange. Same argmin
-    // expression as assignFlat (the AnnIngestSpec pin), so values are
-    // identical; the over-ceiling fallback keeps the join.
+    // as assignFlat, so values are identical.
     val cent = kmeansCentroids(e, 8, 2)
     val ed = edOf(e)
-    val edc = withClusterLitEd(ed, cent)
+    val edc = withCluster(ed, cent, col("ev"))
     val (svs, cb1, codes) = pqModelP(edc, pqM, pqKs, pqSubDim,
       passThrough = Seq("cluster"))
     val lt = pqLookup(svs, cb1)
@@ -1045,19 +919,6 @@ object Similarity extends QueryModule {
     adcTop3(codes.join(broadcast(lt), Seq("j", "code"))
       .filter(col("cluster") === col("q_cluster")
         && col("vec_id") =!= col("query_id")))
-  }
-
-  /** [[withClusterLit]] for an already-`ev`-projected frame: attaches
-    * the nearest-centroid `cluster` as a literal-argmin projection,
-    * falling back to the aggregate assignment join for non-local or
-    * over-ceiling models (same gating as [[assignFlat]]). */
-  private def withClusterLitEd(ed: DataFrame, cent: DataFrame): DataFrame = {
-    if (!isLocalModel(cent))
-      return ed.join(assignFlatAgg(ed, cent), "vec_id")
-    val arr = collectCent(cent)
-    if (arr.nonEmpty && arr.length <= maxLitCentroids)
-      ed.withColumn("cluster", argminLit(arr, col("ev")))
-    else ed.join(assignFlatAgg(ed, cent), "vec_id")
   }
 
   override def queries: Seq[QueryDef] = Seq(
@@ -1698,9 +1559,9 @@ object Similarity extends QueryModule {
     // the point: the kept set spans the space instead of mirroring
     // its density. Admission within a cluster is a deterministic
     // content-independent hash order (reproducible under any
-    // partitioning, no coordination). Scale shape: assignment is
-    // corpus × broadcast(centroids) with a map-side-combinable
-    // argmin (the corpus never shuffles); per-cluster heads ride the
+    // partitioning, no coordination). Scale shape: assignment is a
+    // per-row vec_argmin over the collected centroids (the corpus
+    // never shuffles); per-cluster heads ride the
     // bounded TopK aggregate — the exchange carries clusters × 24
     // buffers, never a cluster's membership, and there is no Window
     // anywhere (oracle ranks with one, Spark must not — PlanSpec).

@@ -3,6 +3,27 @@ package graft
 /** Plan-shape regression guards: the scale properties we rely on must
   * survive refactors — these assert on the formatted physical plan.
   */
+object PlanSpec {
+  import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
+  import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join}
+
+  /** Joins of `df`'s optimized plan that carry a broadcast hint on an
+    * outer join's preserved side — a hint Spark cannot honour (a
+    * preserved side cannot be the build side); it ignores it and logs
+    * a warning on every planning. */
+  def ignoredBroadcastHints(df: org.apache.spark.sql.DataFrame): Seq[Join] = {
+    def bcast(h: Option[HintInfo]) = h.exists(_.strategy.contains(BROADCAST))
+    df.queryExecution.optimizedPlan.collect {
+      case j: Join if (j.joinType match {
+        case LeftOuter => bcast(j.hint.leftHint)
+        case RightOuter => bcast(j.hint.rightHint)
+        case FullOuter => bcast(j.hint.leftHint) || bcast(j.hint.rightHint)
+        case _ => false
+      }) => j
+    }
+  }
+}
+
 class PlanSpec extends SparkSpec {
 
   private def plan(name: String): String = {
@@ -113,11 +134,20 @@ class PlanSpec extends SparkSpec {
 
   test("q135 k-means IVF stage-2 ranks via the bounded aggregate, no window at all") {
     val p = plan("q135_ann_ivf_kmeans")
-    // assignment argmin is min(struct(...)) and stage-2 top-k the
-    // bounded aggregate — NO Window operator anywhere in the route
+    // assignment argmin is a per-row vec_argmin projection and
+    // stage-2 top-k the bounded aggregate — NO Window operator
+    // anywhere in the route
     assert(!p.contains("Window"),
       "a window rank crept into the k-means assignment or stage-2 top-k")
     assert(p.contains("ObjectHashAggregate"), "bounded top-k aggregate missing")
+  }
+
+  test("q205/q206 carry no broadcast hint on an outer join's preserved side") {
+    for (name <- Seq("q205_source_overlap", "q206_source_minhash_sim")) {
+      val df = Registry.all.find(_.name == name).get.fn(spark, sf)
+      val bad = PlanSpec.ignoredBroadcastHints(df)
+      assert(bad.isEmpty, s"$name: ignored broadcast hint on\n${bad.mkString("\n")}")
+    }
   }
 
   test("q110 global threshold joins as a broadcast, never a collect") {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 /** q238 / [[AnnIndex]]: the streaming ANN index ingest. Pins
-  *  - stream ≡ batch: the per-row literal assigner produces exactly
-  *    the relational fit+assign result on the same slice (the
-  *    verdict's hash-equal criterion, checked value-by-value);
+  *  - stream ≡ batch: the per-row vec_argmin assigner produces
+  *    exactly the aggregate argmin ([[ArgminReference]]) of the same
+  *    fit on the same slice (the verdict's hash-equal criterion,
+  *    checked value-by-value);
   *  - the crash-safe EOS loop: replayed/partial epochs land each
   *    assignment exactly once, day-close commits postings
   *    idempotently (the IngestLoopEosSpec schedule on vectors).
@@ -30,11 +31,11 @@ class AnnIngestSpec extends SparkSpec {
       .map(r => r.getLong(0) ->
         (r.getInt(1), r.getInt(2), r.getInt(3), r.getInt(4), r.getInt(5)))
       .toMap
-    // batch truth, built from the SAME relational machinery q190
-    // uses: flat assignFlat against the fitted centroids, subvector
-    // argmin against the fitted codebooks
+    // batch truth: the aggregate argmin (crossJoin + min(struct)) of
+    // the delta against the fitted centroids, and of its subvectors
+    // against the fitted codebooks
     val cent = Similarity.kmeansCentroids(corpus, 8, 2)
-    val clusters = Similarity.assignWith(delta, cent)
+    val clusters = ArgminReference.assign(Similarity.edOf(delta), cent)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (_, cb1, _) = Similarity.pqModel(Similarity.edOf(corpus))
     val dsv = Similarity.edOf(delta)
@@ -147,7 +148,7 @@ class AnnIngestSpec extends SparkSpec {
       (r.getInt(1).toLong, r.getInt(2).toLong, r.getInt(3).toLong)).toMap
     // batch truth at the same geometry
     val cent = Similarity.kmeansCentroids(corpus, 4, 1)
-    val clusters = Similarity.assignWith(delta, cent)
+    val clusters = ArgminReference.assign(Similarity.edOf(delta), cent)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (_, cb1, _) = Similarity.pqModelP(Similarity.edOf(corpus), 2, 4, 32)
     val codes = Similarity.edOf(delta)

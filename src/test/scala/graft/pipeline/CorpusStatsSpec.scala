@@ -87,6 +87,8 @@ class CorpusStatsSpec extends SparkSpec {
     val exact = CorpusStats.sourceOverlap(docs, Long.MaxValue)
     val routed = CorpusStats.sourceOverlap(docs, 0L) // force-route
     assert(routed.schema == exact.schema)
+    assert(graft.PlanSpec.ignoredBroadcastHints(routed).isEmpty,
+      "routed path hints the preserved side of its outer join")
     val r1 = routed.collect().toSeq
     assert(r1 == CorpusStats.sourceOverlap(docs, 0L).collect().toSeq,
       "routed estimate must be deterministic (all-integer estimator)")

@@ -45,6 +45,11 @@ class TwoLevelAssignSpec extends SparkSpec {
       Similarity.assignTwoLevel(spark, ed, cent, superK = 3, nProbe = nProbe)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val p1 = run(1); val p2 = run(2); val p3 = run(3)
+    // the flat pass itself is the aggregate argmin, value for value
+    val ref = ArgminReference.assign(ed,
+        ArgminReference.kmeans(ed, 8, 0))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(flat == ref, "flat assignment diverged from the aggregate argmin")
     assert(p1.size == flat.size, "two-level must assign every vector")
     def agree(m: Map[Long, Long]): Int = m.count { case (k, v) => flat(k) == v }
     // candidate sets grow with nProbe → per-vector agreement is monotone
@@ -52,6 +57,18 @@ class TwoLevelAssignSpec extends SparkSpec {
       s"monotonicity violated: ${agree(p1)}/${agree(p2)}/${agree(p3)}")
     // probing every super IS the flat scan
     assert(p3 == flat, "nProbe = superK must equal the flat assignment")
+  }
+
+  test("duplicated vec_id: one output row per input row, duplicates not collapsed") {
+    val cent = (0 until 8).map(c => (c.toLong, centroid(c))).toDF("cluster", "cv")
+    // vec 5 arrives twice, near two different centroids
+    val vecs = Seq((4L, centroid(4)), (5L, centroid(1)), (5L, centroid(6)))
+      .toDF("vec_id", "ev")
+    val out = Similarity.assignTwoLevel(spark, vecs, cent, superK = 4)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sorted.toSeq
+    assert(out == Seq(4L -> 4L, 5L -> 1L, 5L -> 6L))
+    val kept = Similarity.withClusterTwoLevel(spark, vecs, cent, superK = 4)
+    assert(kept.count() == 3L && kept.columns.toSeq == Seq("vec_id", "ev", "cluster"))
   }
 
   test("semDedup facade: superK = nProbe two-level path equals the flat keep-list") {
